@@ -5,21 +5,26 @@ that raises and aborts the batch before anything is written (reference:
 ``utils/custom_err.py:1-6``; pattern at
 ``Main_Modules/Locations/locations.py:108-111``, ~25 sites).
 
-Two implementations:
+Three forms:
 
-- ``require_no_nulls``: an explicit short-circuit action
+- action gate, ``require_no_nulls``: an explicit short-circuit action
   (``filter(isnull).limit(1)``) — cheap because it stops at the first
   offending row and Catalyst prunes all other columns.
-- ``observed_gate``: attaches ``df.observe`` metrics so the check rides
-  along with the *write* action — zero extra scans, the right shape for
-  a 100 TB batch where a second scan is unaffordable.
+- write-fused gate, ``observed_gate``: attaches ``df.observe`` metrics
+  so the check rides along with the *write* action — zero extra scans,
+  the right shape for a 100 TB batch where a second scan is
+  unaffordable.
+- observed checkpoint, ``checkpoint_observed``: the same metrics riding
+  an eager ``localCheckpoint`` instead, for operators that materialize
+  a relation anyway and steer their plan by its size. Every
+  ``df.observe`` in the package goes through this module.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -69,9 +74,6 @@ class ObservedGate:
             )
 
 
-_gate_counter = 0
-
-
 def observed_gate(df: DataFrame, *cols: str, context: str = "") -> tuple[DataFrame, ObservedGate]:
     """Attach null-count metrics to ``df``; check them post-action.
 
@@ -81,10 +83,24 @@ def observed_gate(df: DataFrame, *cols: str, context: str = "") -> tuple[DataFra
     path first). The reference has the same at-least-once semantics
     (SURVEY.md §3.1).
     """
-    global _gate_counter
-    _gate_counter += 1
-    obs = Observation(f"ri_gate_{_gate_counter}")
+    obs = Observation()
     metrics = [
         F.sum(F.col(c).isNull().cast("long")).alias(f"nulls_{c}") for c in cols
     ]
     return df.observe(obs, *metrics), ObservedGate(obs, tuple(cols), context)
+
+
+def checkpoint_observed(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df``; return it with ``metrics``.
+
+    Each keyword names one aggregate; all of them ride the checkpoint's
+    own action, so reading them costs no extra job. The checkpoint is
+    always eager: a lazy one would hand back the metrics before any
+    action had filled them. With no metrics this is a plain eager
+    checkpoint (``observe`` rejects an empty metric list).
+    """
+    if not metrics:
+        return df.localCheckpoint(eager=True), {}
+    obs = Observation()
+    observed = df.observe(obs, *(c.alias(k) for k, c in metrics.items()))
+    return observed.localCheckpoint(eager=True), obs.get

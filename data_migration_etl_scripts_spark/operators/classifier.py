@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_migration_etl_scripts_spark import planhook
-
+from data_migration_etl_scripts_spark.gates import checkpoint_observed
 from data_migration_etl_scripts_spark.operators import textprep as tp
 
 _DEC = "decimal(20,10)"
@@ -121,18 +121,11 @@ def train_logreg(
     twin bit for bit)."""
     import os
 
-    from pyspark.sql import Observation
-
     n_docs = labels.count()
-    # the feature row count rides the checkpoint action as an observed
-    # metric (r13, VERDICT r12 item 5): the former feats.count() was a
-    # whole extra job (a second scan of the checkpointed relation)
-    # spent only on picking the driver-vs-distributed path.
-    _fobs = Observation(f"logreg_feat_rows_{id(feats)}")
-    feats = feats.observe(
-        _fobs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    n_feat_rows = int(_fobs.get["n"])
+    # the feature row count rides the checkpoint action: a separate
+    # feats.count() would be a second scan spent only on picking the
+    # driver-vs-distributed path
+    feats, counts = checkpoint_observed(feats, n=F.count(F.lit(1)))
     # Two-path (the Lloyd's/pagerank-small pattern, guide §1.2): below
     # the cap the GD loop runs ENTIRELY on the driver over the
     # collected (doc, bucket, x) rows — the distributed loop costs
@@ -145,7 +138,7 @@ def train_logreg(
     # tests/test_classifier.py::test_driver_and_spark_paths_agree.
     # Above the cap the distributed loop below is untouched.
     cap = int(os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_ROWS", 2_000_000))
-    if n_feat_rows <= cap:
+    if counts["n"] <= cap:
         got = _train_logreg_driver(feats, labels, rounds, lr, n_docs)
         if got is not None:
             return got

@@ -28,6 +28,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from data_migration_etl_scripts_spark.gates import checkpoint_observed
+
 
 #: below this many candidate pairs the edge list collects to the
 #: driver and components are labeled with a union-find (exact, one
@@ -118,24 +120,18 @@ def dup_clusters(
             "SPARK_GRAFT_CC_DRIVER_EDGES", _CC_DRIVER_EDGES_DEFAULT
         ))
     # Materialize the pair list ONCE with its row count riding the
-    # checkpoint as an observed metric (r13, VERDICT r12 item 5 — the
-    # pagerank flagged-relation pattern): below the cap the union-find
-    # collect is a bounded scan of the checkpoint; above it the
-    # distributed loop's symmetric union reads the SAME blocks instead
-    # of recomputing the candidate-pair plan for both union sides.
-    # No probe pass is ever wasted at any scale, and no size heuristic
-    # is needed (leaf statistics were tried and REVERTED: a
-    # localCheckpoint leaf inherits its origin JOIN's multiplied
-    # estimate — a 27 MB sf0.1 pair plan reported 717 GB and the
-    # driver path was wrongly skipped, dedup_semantic 0.3 -> 3.9 s).
-    from pyspark.sql import Observation
-
-    uv = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    _obs = Observation(f"cc_pairs_{id(pairs)}")
-    uv = uv.observe(
-        _obs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint(eager=True)
-    if driver_edges_max > 0 and int(_obs.get["n"]) <= driver_edges_max:
+    # checkpoint: below the cap the union-find collect is a bounded
+    # scan of the checkpoint; above it the distributed loop's
+    # symmetric union reads the SAME blocks instead of recomputing the
+    # candidate-pair plan for both union sides. No size heuristic
+    # stands in for the count: a localCheckpoint leaf inherits its
+    # origin JOIN's multiplied estimate (a 27 MB sf0.1 pair plan
+    # reported 717 GB, and the driver path was wrongly skipped).
+    uv, counts = checkpoint_observed(
+        pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        n=F.count(F.lit(1)),
+    )
+    if driver_edges_max > 0 and counts["n"] <= driver_edges_max:
         got = _dup_clusters_driver(uv)
         if got is not None:
             return got

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_migration_etl_scripts_spark.gates import checkpoint_observed
 from data_migration_etl_scripts_spark.operators import textprep as tp
 
 # ------------------------------------------------------------ exact
@@ -382,6 +383,12 @@ def ppjoin_candidate_estimate(
     return int(row["est"] or 0)
 
 
+#: ppjoin_pairs broadcasts the per-doc token arrays only up to this many
+#: docs (docs x avg shingles x ~16 B must stay well under the 8 GB
+#: broadcast ceiling).
+_BCAST_DOCS_MAX = 2_000_000
+
+
 def ppjoin_pairs(
     df: DataFrame,
     id_col: str,
@@ -426,8 +433,9 @@ def ppjoin_pairs(
     widen ``shingle_n`` — SCALE.md's measured advice); above
     ``max_candidates`` (opt-in) the join refuses with ValueError so a
     cluster never discovers the quadratic at hour three. The
-    estimate's one aggregate rides the localCheckpointed token
-    relation, so the pre-flight costs a fraction of the join."""
+    estimate's one aggregate is the action that materializes the
+    lazily checkpointed prefix relation the join then reads, so the
+    pre-flight costs a fraction of the join."""
     num, den = _rational(threshold)
 
     def ceil_tn(ncol):
@@ -441,30 +449,17 @@ def ppjoin_pairs(
         tp.tokens(text_col) if shingle_n <= 1
         else tp.word_shingles(tp.tokens(text_col), n=shingle_n)
     )
-    from pyspark.sql import Observation
-
-    # the broadcast-bound doc count rides the checkpoint action as an
-    # observed metric (r13, guide §1.2): the former ``sizes.count()``
-    # was a whole extra serial job (tok scan + aggregate) just to pick
-    # a join hint. approx_count_distinct is enough for a plan-shape
-    # gate (observe() rejects exact DISTINCT aggregates); the result
-    # set is hint-independent.
-    _ndobs = Observation(f"ppjoin_ndocs_{id(df)}")
-    # when a pre-flight estimate will run, the tok checkpoint is LAZY
-    # and materializes inside the estimate job (one serial job instead
-    # of two — the observed metric arrives with that same action);
-    # without a pre-flight it stays eager so the metric is available.
-    preflight = warn_candidates is not None or max_candidates is not None
-    tok = (
-        df.select(
-            F.col(id_col).alias("doc_id"), F.explode(feat).alias("tok")
-        )
-        .distinct()
-        .observe(_ndobs, F.approx_count_distinct("doc_id").alias("nd"))
-        # five downstream consumers (freq, ordering, sizes, both
-        # verification sides) would each re-run the tokenize+explode+
-        # distinct subtree: materialize the feature relation once
-        .localCheckpoint(eager=not preflight)
+    # five downstream consumers (freq, ordering, sizes, both
+    # verification sides) would each re-run the tokenize+explode+
+    # distinct subtree: materialize the feature relation once. The
+    # broadcast-bound doc count rides that checkpoint's action;
+    # approx_count_distinct is enough for a plan-shape gate (observe()
+    # rejects exact DISTINCT aggregates), and the result set is
+    # hint-independent.
+    tok, tok_stats = checkpoint_observed(
+        df.select(F.col(id_col).alias("doc_id"), F.explode(feat).alias("tok"))
+        .distinct(),
+        nd=F.approx_count_distinct("doc_id"),
     )
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
     # per-doc size via the sizes aggregate + broadcast join-back — a
@@ -481,17 +476,15 @@ def ppjoin_pairs(
         ).alias("pos"),
         "n",
     )
-    # prefix is a LAZY localCheckpoint (r13): no extra serial
-    # materialization job — the checkpoint rides the pre-flight
-    # estimate collect (the first action over the plan), so the freq
-    # join + sizes join + ordering window run ONCE per call instead of
-    # once in the estimate job and again in the candidate join (an
-    # EAGER checkpoint here was measured SLOWER in r12 — it added a
-    # serial job; riding the estimate adds none).
+    # prefix is a LAZY localCheckpoint: it materializes inside the
+    # pre-flight estimate collect (the first action over the plan), so
+    # the freq join + sizes join + ordering window run ONCE per call
+    # instead of once in the estimate job and again in the candidate
+    # join, with no serial job of its own.
     prefix = with_n.where(
         F.col("pos") <= F.col("n") - ceil_tn(F.col("n")) + 1
     ).select("doc_id", "tok", "n", "pos").localCheckpoint(eager=False)
-    if preflight:
+    if warn_candidates is not None or max_candidates is not None:
         est = ppjoin_candidate_estimate(prefix)
         knobs = (
             f"estimated ~{est:,} raw candidate pairs at threshold="
@@ -568,21 +561,15 @@ def ppjoin_pairs(
     # Candidate volume is corpus-dependent; verification cost per
     # candidate is what this bounds.
     # Broadcast only while the per-doc array relation is bounded
-    # (docs x avg shingles x ~16 B must stay well under the 8 GB
-    # broadcast ceiling); above the bound, plain equi-joins — AQE
+    # (_BCAST_DOCS_MAX); above the bound, plain equi-joins — AQE
     # still broadcasts if runtime sizes allow, otherwise the attach
     # is two shuffles of the CANDIDATE set, never an explode.
-    # n rides the candidate set, so the verification no longer
-    # re-attaches sizes (two joins gone); the broadcast-bound doc
-    # count rode the tok checkpoint as an observed metric above.
+    # n rides the candidate set, so the verification never
+    # re-attaches sizes.
     arrs = tok.groupBy("doc_id").agg(
         F.sort_array(F.collect_list("tok")).alias("toks")
     )
-    # the approx doc count's observed metric is available here: either
-    # the eager checkpoint (no pre-flight) or the estimate job (which
-    # materialized the lazy checkpoint) has already run the plan
-    n_docs = int(_ndobs.get["nd"])
-    bc = F.broadcast if n_docs <= 2_000_000 else (lambda df: df)
+    bc = F.broadcast if tok_stats["nd"] <= _BCAST_DOCS_MAX else (lambda df: df)
     arr_a = arrs.select(F.col("doc_id").alias("doc_a"),
                         F.col("toks").alias("toks_a"))
     arr_b = arrs.select(F.col("doc_id").alias("doc_b"),

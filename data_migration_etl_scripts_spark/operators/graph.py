@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from data_migration_etl_scripts_spark import planhook
+from data_migration_etl_scripts_spark.gates import checkpoint_observed
 
 _DEC = "decimal(20,10)"
 
@@ -162,33 +163,26 @@ def pagerank(
     # across iterations, only its rank mass does), so no per-round
     # ranks->out_deg join and no dangling semi-join ever runs. n and
     # the dangling count ride the checkpoint action as observed
-    # metrics (the gates.py observe-fused pattern) -- no separate
-    # count jobs (r12).
+    # metrics -- no separate count jobs.
     flagged_plan = (
         e.select(F.col("src").alias("node"))
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
         .join(out_deg.withColumnRenamed("src", "node"), "node", "left")
     )
-    # Materialize the flagged node relation ONCE (r13, VERDICT r12
-    # item 5): the node and dangling counts ride the checkpoint as
-    # observed metrics, and BOTH the driver-resident path (bounded
-    # toPandas of the checkpoint, taken only when n is already known
-    # to fit) and the partitioned-edge plan consume the same
-    # materialized relation — the former over-cap probe (a separate
-    # full distinct+join pass before falling through) is gone.
-    from pyspark.sql import Observation
-
-    fobs = Observation(f"pagerank_nodes_{id(e)}")
-    flagged = flagged_plan.observe(
-        fobs,
-        F.count(F.lit(1)).alias("n"),
-        F.count_if(F.col("out").isNull()).alias("n_dang"),
-    ).localCheckpoint(eager=True)
-    n = int(fobs.get["n"])
+    # Materialize the flagged node relation ONCE: BOTH the
+    # driver-resident path (bounded toPandas of the checkpoint, taken
+    # only when n is already known to fit) and the partitioned-edge
+    # plan consume it, so no separate over-cap probe pass runs.
+    flagged, counts = checkpoint_observed(
+        flagged_plan,
+        n=F.count(F.lit(1)),
+        n_dang=F.count_if(F.col("out").isNull()),
+    )
+    n = counts["n"]
     if n == 0:
         return flagged.select("node").withColumn("rank", F.lit(0.0))
-    n_dang = int(fobs.get["n_dang"])
+    n_dang = counts["n_dang"]
     if broadcast_nodes_max > 0 and n <= broadcast_nodes_max:
         got = _pagerank_driver_resident(
             e, flagged, n, n_dang, iterations, damping, tol
@@ -255,31 +249,24 @@ def pagerank(
                 ranks["rank"].alias("_prev"),
             )
         )
-        obs = None
-        last = it == iterations - 1
-        if not last:
-            obs = Observation(f"pagerank_obs_{it}_{id(new)}")
-            metrics = [
-                F.coalesce(
-                    F.sum(F.when(F.col("out").isNull(), F.col("rank"))
+        metrics = {}
+        if it < iterations - 1:
+            metrics["dangm"] = F.coalesce(
+                F.sum(F.when(F.col("out").isNull(), F.col("rank"))
+                      .cast(_DEC)).cast("double"),
+                F.lit(0.0),
+            )
+            if tol is not None:
+                metrics["d"] = F.coalesce(
+                    F.sum(F.abs(F.col("rank") - F.col("_prev"))
                           .cast(_DEC)).cast("double"),
                     F.lit(0.0),
-                ).alias("dangm")
-            ]
-            if tol is not None:
-                metrics.append(
-                    F.coalesce(
-                        F.sum(F.abs(F.col("rank") - F.col("_prev"))
-                              .cast(_DEC)).cast("double"),
-                        F.lit(0.0),
-                    ).alias("d")
                 )
-            new = new.observe(obs, *metrics)
-        new = new.select("node", "out", "rank")
         planhook.capture("pagerank_iteration", new)
-        ranks = new.localCheckpoint(eager=True)
-        if obs is not None:
-            m = obs.get
+        # the metrics read _prev, so it is checkpointed and dropped after
+        ranks, m = checkpoint_observed(new, **metrics)
+        ranks = ranks.select("node", "out", "rank")
+        if m:
             if tol is not None and m["d"] <= tol:
                 break
             dangm = m["dangm"]

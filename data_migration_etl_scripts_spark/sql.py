@@ -18,6 +18,9 @@ from __future__ import annotations
 import re
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from data_migration_etl_scripts_spark.gates import checkpoint_observed
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
@@ -1059,23 +1062,15 @@ def _exec_recursive_top(spark: SparkSession, sql: str):
             step_df = spark.sql(step)
             if cols:
                 step_df = step_df.toDF(*cols)
-            # r12 (guide §2.4/§1.2): the frontier count rides the
-            # checkpoint action as an observed metric (one job per
-            # round, not two), and the accumulator stays a UNION of
+            # the frontier count rides the checkpoint action (one job
+            # per round, not two), and the accumulator stays a UNION of
             # the checkpointed deltas — every leaf is already
             # materialized, so lineage is flat without re-copying the
-            # whole accumulated set each round (the former per-round
-            # acc checkpoint was O(|acc|) extra writes per round).
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
-            obs = Observation(f"rcte_{name}_{_i}_{id(step_df)}")
-            new = (
-                step_df.distinct().subtract(acc)
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
+            # whole accumulated set each round.
+            new, counts = checkpoint_observed(
+                step_df.distinct().subtract(acc), n=F.count(F.lit(1))
             )
-            if int(obs.get["n"]) == 0:
+            if counts["n"] == 0:
                 break
             acc = acc.unionAll(new)
             _fanin += 1

@@ -5,6 +5,7 @@ and the MinHash estimator checked against true Jaccard.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_migration_etl_scripts_spark.operators import dedup as dd
@@ -479,26 +480,35 @@ def test_ppjoin_estimate_calibration_non_degenerate(spark):
     assert 2.0 <= ratio <= 10.0, (est, distinct_cand, ratio)
 
 
-def test_ppjoin_no_preflight_matches_default(spark):
-    """r13: with warn_candidates=None and max_candidates=None no
-    pre-flight estimate job runs — the tok checkpoint must stay EAGER
-    so the observed doc-count metric is still available (a lazy
-    checkpoint with no estimate action would deadlock obs.get), and
-    the pair set must match the default pre-flight path exactly."""
+@pytest.mark.parametrize(
+    "warn_candidates", [50_000_000, None], ids=["preflight", "no_preflight"]
+)
+def test_ppjoin_broadcast_gate(spark, monkeypatch, warn_candidates):
+    """The token-array attach carries a broadcast hint only while the
+    observed doc count is within ``_BCAST_DOCS_MAX``, with and without
+    the pre-flight estimate, and the pair set is exact either way. The
+    hint is checked in the optimized logical plan: at toy scale AQE
+    broadcasts the attach whether or not it is hinted."""
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{(i * 7 + j) % 40}" for j in range(12)))
          for i in range(60)],
         "doc_id long, text string",
     )
-    got = sorted(
-        map(tuple, dd.ppjoin_pairs(
-            docs, "doc_id", "text", threshold=0.6,
-            warn_candidates=None, max_candidates=None,
-        ).collect())
-    )
+    toks = {r.doc_id: set(r.text.split()) for r in docs.collect()}
     want = sorted(
-        map(tuple, dd.ppjoin_pairs(
-            docs, "doc_id", "text", threshold=0.6,
-        ).collect())
+        (a, b, len(toks[a] & toks[b]))
+        for a in toks for b in toks
+        if a < b and len(toks[a] & toks[b])
+        / len(toks[a] | toks[b]) >= 0.6
     )
-    assert got == want and len(want) > 0
+    assert want
+    for cap, hinted in ((70, True), (50, False)):
+        monkeypatch.setattr(dd, "_BCAST_DOCS_MAX", cap)
+        out = dd.ppjoin_pairs(
+            docs, "doc_id", "text", threshold=0.6,
+            warn_candidates=warn_candidates,
+        )
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert ("strategy=broadcast" in plan) is hinted, (cap, plan)
+        got = sorted((r.doc_a, r.doc_b, r.n_inter) for r in out.collect())
+        assert got == want, cap

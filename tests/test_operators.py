@@ -5,12 +5,14 @@ training-data-pipeline operator families, on small explicit fixtures.
 from __future__ import annotations
 
 import json
+import pathlib
 
 import pytest
 from pyspark.sql import functions as F
 
 from data_migration_etl_scripts_spark.gates import (
     IncrementalDependencyError,
+    checkpoint_observed,
     observed_gate,
     require_no_nulls,
 )
@@ -48,6 +50,38 @@ def test_observed_gate_fuses_with_action(spark):
     observed.write.format("noop").mode("overwrite").save()
     with pytest.raises(IncrementalDependencyError):
         gate.check()
+
+
+def test_checkpoint_observed_metrics_ride_eager_checkpoint(spark, monkeypatch):
+    df = spark.range(1000).where("id % 3 = 0")
+    cp, m = checkpoint_observed(
+        df, n=F.count(F.lit(1)), top=F.max("id"), evens=F.count_if(F.col("id") % 2 == 0)
+    )
+    assert m == {"n": 334, "top": 999, "evens": 167}
+    plan = cp._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LogicalRDD", plan.toString()
+    assert cp.count() == 334
+
+    def no_observe(*args, **kwargs):
+        raise AssertionError("observe() called with no metrics")
+
+    monkeypatch.setattr(type(df), "observe", no_observe)
+    cp, m = checkpoint_observed(df)
+    assert m == {}
+    assert cp._jdf.queryExecution().optimizedPlan().nodeName() == "LogicalRDD"
+
+
+def test_observe_only_in_gates():
+    """Every observed metric in the package goes through gates.py, so
+    there is one eagerness policy for reading them."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "data_migration_etl_scripts_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{no}"
+        for path in sorted(pkg.rglob("*.py")) if path != pkg / "gates.py"
+        for no, line in enumerate(path.read_text().splitlines(), 1)
+        if "Observation(" in line or ".observe(" in line
+    ]
+    assert not offenders, offenders
 
 
 def test_require_no_nulls_passes_clean(spark):
