@@ -8,8 +8,10 @@ batch and advances the watermark in one transaction
 (``Template_Tables/makes.py:34-127``).
 
 Spark-first re-expression:
-- watermark table = a tiny parquet key/value table (on a real
-  deployment: Delta + MERGE INTO);
+- watermark table = a tiny parquet key/value table read and written
+  on the driver with pyarrow (no Spark job) and replaced atomically
+  with ``os.replace`` on each advance; ``run_incremental`` reads it
+  once per call (on a real deployment: Delta + MERGE INTO);
 - extraction = ``where(pk > wm).orderBy(pk).limit(N)`` — Catalyst
   pushes the range predicate into the scan (parquet row-group pruning /
   JDBC WHERE);
@@ -21,8 +23,9 @@ Spark-first re-expression:
 - ``batch_ts`` is injectable for deterministic tests (the reference
   stamps ``datetime.now()`` — §7.4 risk 1).
 
-Scale note: the micro-batch loop is a *driver* loop; each iteration is
-one distributed job. Batch size plays the role of the reference's TOP N
+Scale note: the micro-batch loop is a *driver* loop; each iteration
+runs the batch's distributed jobs, and the watermark read and advance
+add none. Batch size plays the role of the reference's TOP N
 (100..15000 rows there; set orders of magnitude higher on a cluster).
 """
 
@@ -31,23 +34,37 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import tempfile
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from data_migration_etl_scripts_spark.gates import observed_gate
 
 
 class WatermarkStore:
-    """Tiny (table_name -> max_index) state table, parquet-backed.
+    """Tiny (table_name -> max_index) state table, kept on the driver.
 
-    The whole table is a handful of rows; overwrite-per-advance is the
-    parquet equivalent of the reference's T-SQL MERGE upsert
-    (``Template_Tables/makes.py:101-110``).
+    The reference reads ``app.EtlCDC`` and upserts it with one T-SQL
+    MERGE per batch (``Template_Tables/makes.py:34-47, 101-110``): one
+    row, one statement. The table here is a handful of rows, so it is
+    read and rewritten with ``pyarrow`` on the driver and starts no
+    Spark job. ``advance`` writes the whole table to a hidden temporary
+    file in the directory and ``os.replace``-s it over one fixed part
+    name, so a crash at any point leaves either the old table or the
+    new one, never none. The directory stays a plain parquet table
+    with :attr:`SCHEMA` that Spark can read. On a cluster the same
+    state is a Delta table advanced with MERGE INTO.
+
+    ``spark`` stays in the signature for existing callers; the store
+    never uses it.
     """
 
     SCHEMA = T.StructType(
@@ -56,38 +73,60 @@ class WatermarkStore:
             T.StructField("max_index", T.LongType(), False),
         ]
     )
+    _ARROW_SCHEMA = to_arrow_schema(SCHEMA)
+    _PART = "part-00000-watermarks.parquet"
 
     def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
         self.path = path
 
-    def _read(self) -> DataFrame:
-        if not os.path.exists(self.path):
-            return self.spark.createDataFrame([], self.SCHEMA)
-        return self.spark.read.schema(self.SCHEMA).parquet(self.path)
+    def _read(self) -> dict[str, int]:
+        """Every ``part-*`` file of the directory (none = ``{}``). A key
+        present more than once keeps its largest value: watermarks only
+        move forward, so the largest is the latest (a table written by
+        an older Spark-based store, or a cleanup cut short, can hold
+        several part files)."""
+        state: dict[str, int] = {}
+        for f in glob.glob(os.path.join(self.path, "part-*")):
+            t = pq.read_table(f, columns=["table_name", "max_index"])
+            for name, mx in zip(
+                t.column("table_name").to_pylist(), t.column("max_index").to_pylist()
+            ):
+                state[name] = max(mx, state.get(name, mx))
+        return state
 
     def get(self, table_name: str) -> int | None:
         """None = never run (do NOT assume 0: source keys may start at 0
         or be negative; the reference's ISNULL(MaxIndex,0) default would
         silently skip a pk=0 row)."""
-        rows = self._read().where(F.col("table_name") == table_name).collect()
-        return int(rows[0].max_index) if rows else None
+        return self._read().get(table_name)
 
     def advance(self, table_name: str, new_max: int) -> None:
-        current = self.get(table_name)
+        state = self._read()
+        current = state.get(table_name)
         if current is not None and new_max < current:
             raise ValueError(
                 f"watermark for {table_name} must be monotone: {new_max} < {current}"
             )
-        others = self._read().where(F.col("table_name") != table_name)
-        updated = others.unionByName(
-            self.spark.createDataFrame([(table_name, new_max)], self.SCHEMA)
+        state[table_name] = new_max
+        table = pa.table(
+            [list(state), list(state.values())], schema=self._ARROW_SCHEMA
         )
-        # tiny table: collect-and-rewrite avoids read/overwrite-same-path races
-        rows = [(r.table_name, int(r.max_index)) for r in updated.collect()]
-        self.spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(self.path)
+        os.makedirs(self.path, exist_ok=True)
+        # dot-prefixed: Spark and _read both skip it until it is renamed
+        fd, tmp = tempfile.mkstemp(dir=self.path, prefix=".wm-", suffix=".parquet")
+        try:
+            with os.fdopen(fd, "wb") as fh:
+                pq.write_table(table, fh)
+                fh.flush()
+                os.fsync(fh.fileno())
+            os.replace(tmp, os.path.join(self.path, self._PART))
+        except BaseException:
+            os.unlink(tmp)
+            raise
+        # the new part holds every key, so any older part is redundant
+        for f in glob.glob(os.path.join(self.path, "part-*")):
+            if os.path.basename(f) != self._PART:
+                os.remove(f)
 
 
 @dataclass
@@ -122,6 +161,8 @@ class BatchResult:
     batches: int
     rows: int
     final_watermark: int | None
+    #: the watermark the run started from (None = never run before)
+    start_watermark: int | None = None
 
 
 def _validate_staged(staging: str) -> list[str]:
@@ -207,9 +248,10 @@ def run_incremental(
     ts = batch_ts or datetime.now(timezone.utc)
     wm_col = pipeline.watermark_col
     total_rows, batches = 0, 0
+    # read once: this loop is the only writer of the pipeline's watermark
+    wm = start_wm = store.get(pipeline.name)
 
     while max_batches is None or batches < max_batches:
-        wm = store.get(pipeline.name)
         source = pipeline.source()
         remaining = source if wm is None else source.where(F.col(wm_col) > F.lit(wm))
         if batch_size is None:
@@ -301,13 +343,16 @@ def run_incremental(
                 catalog.write(loaded, pipeline.sink_table, mode="append")
                 for sink_name, project in pipeline.extra_sinks:
                     catalog.write(project(loaded), sink_name, mode="append")
-            store.advance(pipeline.name, int(agg["mx"]))
+            wm = int(agg["mx"])
+            store.advance(pipeline.name, wm)
             total_rows += int(agg["n"])
             batches += 1
         finally:
             batch.unpersist()
 
-    return BatchResult(batches=batches, rows=total_rows, final_watermark=store.get(pipeline.name))
+    return BatchResult(
+        batches=batches, rows=total_rows, final_watermark=wm, start_watermark=start_wm
+    )
 
 
 def run_scoped(

@@ -5,10 +5,12 @@ monotone watermark, dual-output sinks)."""
 from __future__ import annotations
 
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from data_migration_etl_scripts_spark import cdc as cdc_mod
 from data_migration_etl_scripts_spark.catalog import Catalog
 from data_migration_etl_scripts_spark.cdc import (
     IncrementalPipeline,
@@ -39,13 +41,16 @@ def orders_pipeline(cat, **kw):
 
 
 def test_full_load_then_resume_noop(cat):
+    store = WatermarkStore(cat.spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
     r1 = run_incremental(cat, orders_pipeline(cat), batch_size=600)
     assert r1.rows == 1500 and r1.batches == 3
-    assert r1.final_watermark == 1499
+    assert r1.start_watermark is None
+    assert r1.final_watermark == 1499 == store.get("orders")
     assert cat.read("orders_v2").count() == 1500
 
     r2 = run_incremental(cat, orders_pipeline(cat), batch_size=600)
     assert r2.rows == 0 and r2.batches == 0
+    assert r2.start_watermark == r2.final_watermark == 1499
     assert cat.read("orders_v2").count() == 1500  # no double-insert
 
 
@@ -114,6 +119,91 @@ def test_watermark_monotonicity_enforced(cat):
     with pytest.raises(ValueError):
         store.advance("t", 99)
     assert store.get("t") == 150
+
+
+@pytest.mark.parametrize("fail_at", ["write", "replace"])
+def test_watermark_advance_crash_keeps_earlier_state(cat, monkeypatch, fail_at):
+    """A crash while an advance writes or swaps in the new table leaves
+    the previous table readable: the old overwrite-in-place deleted the
+    directory before writing, losing every pipeline's watermark."""
+    store = WatermarkStore(cat.spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
+    store.advance("a", 10)
+    store.advance("b", 20)
+
+    def torn_write(table, where, **kw):
+        where.write(b"PAR1 torn")
+        raise OSError("injected crash mid-write")
+
+    def failed_replace(src, dst):
+        raise OSError("injected crash before rename")
+
+    if fail_at == "write":
+        monkeypatch.setattr(cdc_mod.pq, "write_table", torn_write)
+    else:
+        monkeypatch.setattr(cdc_mod.os, "replace", failed_replace)
+    with pytest.raises(OSError, match="injected"):
+        store.advance("c", 30)
+    monkeypatch.undo()
+
+    assert (store.get("a"), store.get("b"), store.get("c")) == (10, 20, None)
+    # the temporary file is gone; only the committed part remains
+    assert os.listdir(store.path) == [WatermarkStore._PART]
+
+
+def test_watermark_reads_table_written_by_spark(cat, spark):
+    """A table written the way the Spark-based store wrote it (part
+    file plus _SUCCESS and .crc siblings) reads back in full; a key in
+    two part files keeps its largest value; one advance leaves exactly
+    one part file holding every key, still readable by Spark."""
+    store = WatermarkStore(spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
+    spark.createDataFrame([("a", 5), ("b", 7)], WatermarkStore.SCHEMA).coalesce(
+        1
+    ).write.parquet(store.path)
+    assert os.path.exists(os.path.join(store.path, "_SUCCESS"))
+    assert (store.get("a"), store.get("b"), store.get("z")) == (5, 7, None)
+
+    spark.createDataFrame([("a", 3), ("c", 9)], WatermarkStore.SCHEMA).coalesce(
+        1
+    ).write.mode("append").parquet(store.path)
+    assert (store.get("a"), store.get("c")) == (5, 9)
+
+    store.advance("b", 8)
+    parts = [f for f in os.listdir(store.path) if f.startswith("part-")]
+    assert parts == [WatermarkStore._PART]
+    assert (store.get("a"), store.get("b"), store.get("c")) == (5, 8, 9)
+    back = spark.read.schema(WatermarkStore.SCHEMA).parquet(store.path)
+    assert sorted(tuple(r) for r in back.collect()) == [("a", 5), ("b", 8), ("c", 9)]
+
+
+def test_watermark_store_starts_no_spark_job(cat, spark):
+    """get and advance run on the driver: a job group around them
+    collects no job. A Spark action in a second group, run after them,
+    shows the status tracker is recording (its listener is asynchronous
+    but in order, so once the probe job shows, an earlier job would)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = WatermarkStore(spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
+
+    def in_group(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    def store_ops():
+        assert store.get("t") is None
+        store.advance("t", 1)
+        store.advance("t", 2)
+        assert store.get("t") == 2
+
+    in_group("wm_store", store_ops)
+    in_group("wm_probe", lambda: spark.range(3).count())
+    deadline = time.monotonic() + 10
+    while not list(tracker.getJobIdsForGroup("wm_probe")) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert list(tracker.getJobIdsForGroup("wm_probe"))
+    assert list(tracker.getJobIdsForGroup("wm_store")) == []
 
 
 def test_watermark_zero_key_not_skipped(cat, spark):
@@ -197,26 +287,31 @@ def test_schema_evolution_merge_read(cat, spark):
     assert got == {1: None, 2: 99}
 
 
-def test_idempotent_batches_survive_crash_replay(cat, spark):
+def test_idempotent_batches_survive_crash_replay(cat, monkeypatch):
     """idempotent=True: a crash between batch write and watermark
     advance replays the SAME batch into the SAME deterministic
     directory — no duplicates."""
     pipe = orders_pipeline(cat, transform=lambda df, ts: df.select("o_orderkey", "o_custkey"))
-    r = run_incremental(cat, pipe, batch_size=600, idempotent=True)
-    assert r.rows == 1500 and r.batches == 3
+
+    # crash after the last batch's write, before its advance: the
+    # watermark still holds the PREVIOUS batch boundary (1199) while
+    # the last batch's directory (batch-1499) is already on disk
+    orig = WatermarkStore.advance
+
+    def crashing_advance(self, name, mx):
+        if mx == 1499:
+            raise RuntimeError("injected crash: sink written, watermark not")
+        return orig(self, name, mx)
+
+    monkeypatch.setattr(WatermarkStore, "advance", crashing_advance)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_incremental(cat, pipe, batch_size=600, idempotent=True)
+    monkeypatch.setattr(WatermarkStore, "advance", orig)
+    store = WatermarkStore(cat.spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
+    assert store.get("orders") == 1199
     assert cat.read("orders_v2").count() == 1500
 
-    # simulate crash-after-write-before-advance: the watermark still
-    # holds the PREVIOUS batch boundary (1199) while the last batch's
-    # directory (batch-1499) is already on disk; replay re-extracts the
-    # identical batch and overwrites the same directory
-    store = WatermarkStore(cat.spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
-    others = store._read().where(F.col("table_name") != "orders").collect()
-    rows = [(r2.table_name, int(r2.max_index)) for r2 in others] + [("orders", 1199)]
-    cat.spark.createDataFrame(rows, store.SCHEMA).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(store.path)
-
+    # replay re-extracts the identical batch and overwrites the same directory
     r2 = run_incremental(cat, pipe, batch_size=600, idempotent=True)
     assert r2.rows == 300  # the replayed final batch (keys 1200-1499)
     assert cat.read("orders_v2").count() == 1500  # still no duplicates
