@@ -65,8 +65,9 @@ class Catalog:
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
-        # Idempotent sinks nest per-batch subdirectories (batch-<wm>),
-        # which need recursiveFileLookup — but that option DISABLES
+        # Migration sinks nest per-batch subdirectories
+        # (batch-<pipeline>-<key>, cdc.commit_batch), which need
+        # recursiveFileLookup — but that option DISABLES
         # hive partition discovery, so apply it only when non-hive
         # (no '=') subdirectories are present.
         p = self.path(name)

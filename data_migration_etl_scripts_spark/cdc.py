@@ -15,11 +15,15 @@ Spark-first re-expression:
 - extraction = ``where(pk > wm).orderBy(pk).limit(N)`` — Catalyst
   pushes the range predicate into the scan (parquet row-group pruning /
   JDBC WHERE);
-- failure model = the reference's at-least-once: a batch whose RI gate
-  trips raises BEFORE any write; a crash between write and watermark
-  advance re-processes the batch on restart (pair with
-  ``anti_join_existing`` for the idempotent pipelines, exactly as the
-  reference does — SURVEY.md §7.4 risk 4);
+- failure model = one commit per batch (:func:`commit_batch`): staged
+  write, gate check, part validation, then one rename per sink into
+  ``batch-<pipeline>-<key>``, the main sink last with a commit record;
+  the watermark advances after. A batch committed before a crash is
+  rolled forward from its record on restart (:func:`committed_batch`),
+  never recomputed, so each batch lands exactly once, even when its
+  transform anti-joins against its own sink (SURVEY.md §7.4 risk 4).
+  ``run_scoped`` keys every call afresh, so its re-runs append (pair
+  them with ``anti_join_existing``, as the reference's re-runs do);
 - ``batch_ts`` is injectable for deterministic tests (the reference
   stamps ``datetime.now()`` — §7.4 risk 1).
 
@@ -31,10 +35,13 @@ add none. Batch size plays the role of the reference's TOP N
 
 from __future__ import annotations
 
+import contextlib
 import glob
+import json
 import os
 import shutil
 import tempfile
+import uuid
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
@@ -165,18 +172,16 @@ class BatchResult:
     start_watermark: int | None = None
 
 
-def _validate_staged(staging: str) -> list[str]:
-    """Torn-write guard for the staged batch: a parquet file begins
+def _validate_staged(staging: str) -> None:
+    """Torn-write guard for a staged directory: a parquet file begins
     and ends with the 4-byte magic ``PAR1``, so a truncated or
     corrupted part (crash mid-flush, full disk) is detectable with one
-    8-byte read per file. Called before ANY downstream write consumes
-    the staging directory — a corrupt part aborts the batch with the
-    sink untouched and the watermark unadvanced, and the next run
-    replays the batch from the source (chaos-tested in
+    8-byte read per file. A corrupt part aborts the batch before
+    anything is renamed into a sink, and the watermark stays put, so
+    the next run replays the batch from the source (chaos-tested in
     tests/test_dag_chaos.py). O(#files) driver-side reads; a
     distributed commit protocol does strictly more."""
-    parts = sorted(glob.glob(os.path.join(staging, "part-*")))
-    for f in parts:
+    for f in sorted(glob.glob(os.path.join(staging, "part-*"))):
         size = os.path.getsize(f)
         head = tail = b""
         if size >= 12:
@@ -190,23 +195,87 @@ def _validate_staged(staging: str) -> list[str]:
                 f"(size={size}, magic {head!r}/{tail!r}) — aborting "
                 "promotion; sink untouched, batch will replay"
             )
-    return parts
 
 
-def _promote_staged(staging: str, sink: str) -> None:
-    """Move staged part files into the sink directory (same filesystem
-    rename — atomic per file; parquet append IS adding files).
+#: commit record inside the main sink's batch directory; Spark skips
+#: ``_``-prefixed files when it lists a table
+_COMMIT_RECORD = "_batch.json"
 
-    Parts are re-validated at promotion time (see
-    :func:`_validate_staged` — the loop calls it BEFORE any dual-sink
-    append, so a torn file aborts before anything downstream is
-    written; the re-check here keeps the invariant even for direct
-    callers)."""
-    parts = _validate_staged(staging)
-    os.makedirs(sink, exist_ok=True)
-    for f in parts:
-        shutil.move(f, os.path.join(sink, os.path.basename(f)))
-    shutil.rmtree(staging, ignore_errors=True)
+
+def _batch_dir(catalog, table: str, name: str, key: int | str) -> str:
+    return os.path.join(catalog.scratch_dir, table, f"batch-{name}-{key}")
+
+
+def committed_batch(
+    catalog, name: str, tables: Sequence[str], key: int | str
+) -> dict | None:
+    """The commit record of batch ``key`` of pipeline ``name`` if that
+    batch committed, else None.
+
+    ``tables`` lists the main sink first, then the extra sinks. With no
+    record, whatever a commit cut between its renames left in an extra
+    sink is removed here (and the sink directory with it, if that empties
+    it), so the recomputed batch sees the sinks as they were before it.
+    """
+    main = _batch_dir(catalog, tables[0], name, key)
+    try:
+        with open(os.path.join(main, _COMMIT_RECORD)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        pass
+    for table in tables:
+        target = _batch_dir(catalog, table, name, key)
+        shutil.rmtree(target, ignore_errors=True)
+        with contextlib.suppress(OSError):
+            os.rmdir(os.path.dirname(target))  # only if now empty
+    return None
+
+
+def commit_batch(
+    catalog,
+    name: str,
+    sink_table: str,
+    extra_sinks: Sequence[tuple[str, Callable[[DataFrame], DataFrame]]],
+    df: DataFrame,
+    key: int | str,
+    gates: Sequence[str] = (),
+    record: dict | None = None,
+) -> None:
+    """Land one load-ready batch of pipeline ``name`` in ``sink_table``
+    and every extra sink, exactly once per ``key``.
+
+    ``df`` is written once to ``_staging/<name>/<sink_table>`` (the
+    ``gates`` null counts ride that write), the gates are checked and
+    the parts validated. Each extra sink is built from the staged files,
+    read with ``df``'s schema (no inference job), and staged the same
+    way. Each staged directory is then renamed to
+    ``<sink>/batch-<name>-<key>``, the main sink last, carrying
+    ``record``: the batch counts as committed (:func:`committed_batch`)
+    only once every sink holds it. A failure before the renames leaves
+    every sink untouched; an existing batch directory is never replaced.
+    """
+    staging = os.path.join("_staging", name)
+    try:
+        if gates:
+            df, gate = observed_gate(df, *gates, context=name)
+        main = catalog.write(df, os.path.join(staging, sink_table))
+        if gates:
+            gate.check()  # metrics came free with the staged write
+        _validate_staged(main)
+        batch = catalog.spark.read.schema(df.schema).parquet(main)
+        staged = {}
+        for table, project in extra_sinks:
+            staged[table] = catalog.write(project(batch), os.path.join(staging, table))
+            _validate_staged(staged[table])
+        with open(os.path.join(main, _COMMIT_RECORD), "w") as fh:
+            json.dump(record or {}, fh)
+        staged[sink_table] = main  # renamed last: its record marks the commit
+        for table, path in staged.items():
+            target = _batch_dir(catalog, table, name, key)
+            os.makedirs(os.path.dirname(target), exist_ok=True)
+            os.rename(path, target)
+    finally:
+        shutil.rmtree(os.path.join(catalog.scratch_dir, staging), ignore_errors=True)
 
 
 def run_incremental(
@@ -216,7 +285,6 @@ def run_incremental(
     batch_ts: datetime | None = None,
     max_batches: int | None = None,
     observe_gates: Sequence[str] = (),
-    idempotent: bool = False,
 ) -> BatchResult:
     """Drive the micro-batch loop until the source is exhausted.
 
@@ -227,31 +295,35 @@ def run_incremental(
     reference uses 100..15000), never "a huge number meaning all".
 
     ``observe_gates``: RI-gate columns checked via ``df.observe``
-    metrics that ride along with the WRITE action — one scan per batch
-    instead of gate-scan + write-scan. The batch lands in a staging
-    directory first; only a clean gate promotes the files into the
-    sink (rename, no rewrite) and advances the watermark, so a tripped
-    gate leaves the sink untouched — same abort contract as the
-    action-based ``require_no_nulls``, at half the I/O. This is the
-    shape to use when a batch is too big to scan twice.
+    metrics that ride the staged write of :func:`commit_batch` — one
+    scan per batch instead of gate-scan + write-scan. A tripped gate
+    leaves every sink untouched and the watermark unadvanced, the same
+    abort contract as the action-based ``require_no_nulls`` at half the
+    I/O. This is the shape to use when a batch is too big to scan twice.
 
-    ``idempotent``: each batch writes into a DETERMINISTIC
-    per-watermark subdirectory of the sink (``batch-<max_index>``)
-    with overwrite semantics. A crash between write and watermark
-    advance then re-runs the SAME batch into the SAME directory on
-    restart — no duplicates, upgrading the reference's at-least-once
-    contract to effective exactly-once without a transaction log
-    (SURVEY.md §7.4 risk 4). Requires nothing from readers:
-    catalog.read lists sink directories recursively.
+    Each batch commits to ``batch-<name>-<start watermark>`` directories
+    (``none`` for a pipeline's first batch). A batch committed before a
+    crash that kept its watermark from advancing is rolled forward, not
+    recomputed: the watermark advances to the batch's recorded end, and
+    its rows count in the result as if it had just been loaded.
     """
     store = WatermarkStore(catalog.spark, os.path.join(catalog.scratch_dir, "_etl_cdc"))
     ts = batch_ts or datetime.now(timezone.utc)
     wm_col = pipeline.watermark_col
+    tables = [pipeline.sink_table, *(t for t, _ in pipeline.extra_sinks)]
     total_rows, batches = 0, 0
     # read once: this loop is the only writer of the pipeline's watermark
     wm = start_wm = store.get(pipeline.name)
 
     while max_batches is None or batches < max_batches:
+        key = "none" if wm is None else wm
+        done = committed_batch(catalog, pipeline.name, tables, key)
+        if done is not None:
+            wm = done["end"]
+            store.advance(pipeline.name, wm)
+            total_rows += done["rows"]
+            batches += 1
+            continue
         source = pipeline.source()
         remaining = source if wm is None else source.where(F.col(wm_col) > F.lit(wm))
         if batch_size is None:
@@ -292,7 +364,7 @@ def run_incremental(
                 )
             head_mx = head["mx"]
             batch = remaining.where(F.col(wm_col) <= F.lit(head_mx))
-        # cache: the batch feeds transform + watermark max + (maybe) dual sinks
+        # cache: the batch feeds the watermark max and the transform
         batch = batch.cache()
         try:
             agg = batch.agg(
@@ -307,45 +379,12 @@ def run_incremental(
                 )
 
                 enforce(pipeline.expectations(loaded))  # aborts pre-write
-            if observe_gates:
-                observed, gate = observed_gate(
-                    loaded, *observe_gates, context=pipeline.name
-                )
-                staging = os.path.join(
-                    catalog.scratch_dir, "_staging", pipeline.name
-                )
-                shutil.rmtree(staging, ignore_errors=True)
-                observed.write.mode("overwrite").parquet(staging)
-                try:
-                    gate.check()  # metrics came free with the write
-                except Exception:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise
-                sink_path = os.path.join(catalog.scratch_dir, pipeline.sink_table)
-                # torn-write guard BEFORE any dual-sink append: a
-                # corrupt staged part must abort while nothing
-                # downstream has been written yet
-                _validate_staged(staging)
-                staged = catalog.spark.read.parquet(staging)
-                for sink_name, project in pipeline.extra_sinks:
-                    catalog.write(project(staged), sink_name, mode="append")
-                _promote_staged(staging, sink_path)
-            elif idempotent:
-                suffix = os.path.join("", f"batch-{int(agg['mx'])}")
-                catalog.write(
-                    loaded, os.path.join(pipeline.sink_table, suffix), mode="overwrite"
-                )
-                for sink_name, project in pipeline.extra_sinks:
-                    catalog.write(
-                        project(loaded), os.path.join(sink_name, suffix), mode="overwrite"
-                    )
-            else:
-                catalog.write(loaded, pipeline.sink_table, mode="append")
-                for sink_name, project in pipeline.extra_sinks:
-                    catalog.write(project(loaded), sink_name, mode="append")
-            wm = int(agg["mx"])
+            record = {"end": int(agg["mx"]), "rows": int(agg["n"])}
+            commit_batch(catalog, pipeline.name, pipeline.sink_table,
+                         pipeline.extra_sinks, loaded, key, observe_gates, record)
+            wm = record["end"]
             store.advance(pipeline.name, wm)
-            total_rows += int(agg["n"])
+            total_rows += record["rows"]
             batches += 1
         finally:
             batch.unpersist()
@@ -368,7 +407,8 @@ def run_scoped(
     This is the engine form of the reference's ``zTEST`` scripts
     (``Main_Modules/zTEST/items.py:40-70``): re-process one account /
     one key range to patch data after a fix, without disturbing the
-    incremental state. Idempotency is the transform's job — pair with
+    incremental state. Each call commits under a fresh key, so a re-run
+    appends: idempotency is the transform's job — pair with
     ``anti_join_existing`` exactly as the reference's re-runs do.
     Returns the number of rows written.
     """
@@ -377,7 +417,6 @@ def run_scoped(
     loaded = pipeline.transform(batch, ts)
     n = loaded.count()
     if n:
-        catalog.write(loaded, pipeline.sink_table, mode="append")
-        for sink_name, project in pipeline.extra_sinks:
-            catalog.write(project(loaded), sink_name, mode="append")
+        commit_batch(catalog, pipeline.name, pipeline.sink_table,
+                     pipeline.extra_sinks, loaded, f"scoped-{uuid.uuid4().hex}")
     return n

@@ -11,9 +11,9 @@ Three forms:
   (``filter(isnull).limit(1)``) — cheap because it stops at the first
   offending row and Catalyst prunes all other columns.
 - write-fused gate, ``observed_gate``: attaches ``df.observe`` metrics
-  so the check rides along with the *write* action — zero extra scans,
-  the right shape for a 100 TB batch where a second scan is
-  unaffordable.
+  so the check rides along with the staged *write* of
+  ``cdc.commit_batch`` — zero extra scans, the right shape for a 100 TB
+  batch where a second scan is unaffordable.
 - observed checkpoint, ``checkpoint_observed``: the same metrics riding
   an eager ``localCheckpoint`` instead, for operators that materialize
   a relation anyway and steer their plan by its size. Every
@@ -58,7 +58,8 @@ def require_no_nulls(df: DataFrame, *cols: str, context: str = "") -> DataFrame:
 
 @dataclass
 class ObservedGate:
-    """An observe()-based RI gate fused with a later action."""
+    """An observe()-based RI gate fused with a later action (in
+    ``cdc.commit_batch``: the staged write, checked before any rename)."""
 
     observation: Observation
     cols: tuple[str, ...]
@@ -77,11 +78,12 @@ class ObservedGate:
 def observed_gate(df: DataFrame, *cols: str, context: str = "") -> tuple[DataFrame, ObservedGate]:
     """Attach null-count metrics to ``df``; check them post-action.
 
-    Note: with plain parquet sinks the write has already happened when
-    the gate trips, so the caller must pair this with an idempotent /
-    staged write (see cdc.run_incremental which writes to a staging
-    path first). The reference has the same at-least-once semantics
-    (SURVEY.md §3.1).
+    The metrics fill only when the consuming action runs, so that action
+    must write where no reader looks yet: ``cdc.commit_batch`` writes
+    the batch to a staging directory, checks the gate, and renames the
+    staged files into the sink only when it passes. A tripped gate
+    leaves every sink untouched, as the reference's pre-write null
+    checks do (``utils/custom_err.py:1-6``).
     """
     obs = Observation()
     metrics = [

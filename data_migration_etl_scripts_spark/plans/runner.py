@@ -9,8 +9,13 @@ sorts them, so the canonical order is derived, not maintained.
 
 Failure semantics mirror the reference (SURVEY.md §3.1): a failing
 pipeline stops its downstream subtree (already-committed upstream
-batches survive — at-least-once with watermark resume), while
-independent subtrees continue.
+batches survive and the next run resumes each pipeline from its
+watermark), while independent subtrees continue. A batch committed but
+not yet recorded in its watermark is rolled forward from its commit
+record on the next run (``cdc.committed_batch``), never recomputed, so
+a restarted DAG lands every batch exactly once, including pipelines
+that anti-join against their own sink (proved by
+tests/test_dag_chaos.py).
 """
 
 from __future__ import annotations
@@ -71,14 +76,7 @@ class DagRunner:
     def order(self) -> list[str]:
         return list(TopologicalSorter(self._deps).static_order())
 
-    def run(
-        self, batch_ts: datetime | None = None, idempotent: bool = False
-    ) -> RunReport:
-        """``idempotent=True`` passes cdc.py's deterministic per-batch
-        sink directories through to every pipeline: a crash anywhere
-        between a sink write and its watermark advance replays into
-        byte-identical rewrites on the next run — the DAG-level
-        exactly-once mode (proved by tests/test_dag_chaos.py)."""
+    def run(self, batch_ts: datetime | None = None) -> RunReport:
         order = self.order()
         report = RunReport(order=order)
         failed: set[str] = set()
@@ -94,7 +92,6 @@ class DagRunner:
                     self._pipelines[name],
                     batch_size=self._batch_sizes[name],
                     batch_ts=batch_ts,
-                    idempotent=idempotent,
                 )
             except Exception as exc:  # gate aborts land here
                 report.failures.append(PipelineFailure(name, exc))

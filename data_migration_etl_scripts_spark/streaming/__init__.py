@@ -6,7 +6,8 @@ module is the Spark-native upgrade path for the same contract:
 
 - :func:`stream_pipeline` — a pipeline's transform applied through
   ``readStream`` + ``foreachBatch``, with exactly-once sink semantics
-  from the streaming checkpoint (vs the batch runner's at-least-once).
+  from the streaming checkpoint and ``cdc.commit_batch`` keyed by batch
+  id (the batch runner commits the same way, keyed by watermark).
 - :func:`windowed_event_aggregate` / :func:`stream_sessionize` —
   event-time windows + watermarks for late data, the streaming analog
   of the batch sessionization query.

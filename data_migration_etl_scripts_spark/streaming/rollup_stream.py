@@ -9,8 +9,8 @@ Exactly-once without a transaction log: the rollup state is VERSIONED
 BY BATCH ID (``rollup/v=<batch_id>``). A batch always folds the latest
 version STRICTLY BELOW its own id and (over)writes its own version, so
 a crash-replayed batch re-derives the identical output from the
-identical input instead of double-counting — the same idempotent
-batch-directory pattern as cdc.py's idempotent appends. Superseded
+identical input instead of double-counting — the same replay-safe
+batch-directory pattern as ``cdc.commit_batch``. Superseded
 versions are pruned, keeping the state O(rollup) not O(batches).
 """
 

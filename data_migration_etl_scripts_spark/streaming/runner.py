@@ -4,12 +4,12 @@
 new batches — the file-arrival analog of `pk > watermark`), applies
 the SAME transform callable an IncrementalPipeline uses (gates raise
 inside foreachBatch, failing the query before the batch commits), and
-appends to the catalog sink. The streaming checkpoint replaces the
-EtlCDC watermark table, and every sink write is a per-batch-id
-OVERWRITE directory, so a crash-replayed batch rewrites its own
-output instead of appending a duplicate — exactly-once per batch,
-strictly stronger than the reference's at-least-once contract
-(SURVEY.md §2.1 S11).
+commits each batch through ``cdc.commit_batch`` keyed by its batch id.
+The streaming checkpoint replaces the EtlCDC watermark table; a batch
+replayed after a crash between its commit and the checkpoint commit
+finds its ``batch-<name>-<batch_id>`` commit record and is skipped
+instead of appended again — exactly-once per batch, strictly stronger
+than the reference's at-least-once contract (SURVEY.md §2.1 S11).
 
 ``trigger_available_now`` drains everything currently in the source
 then stops — the streaming equivalent of the reference's "loop until
@@ -24,6 +24,8 @@ from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from data_migration_etl_scripts_spark.cdc import commit_batch, committed_batch
 
 
 def stream_pipeline(
@@ -44,7 +46,7 @@ def stream_pipeline(
     """Run (or start) the streaming version of a pipeline.
 
     ``expectations`` mirrors IncrementalPipeline.expectations: the
-    transformed batch is checked pre-append; a violation fails the
+    transformed batch is checked before the commit; a violation fails the
     query before the batch commits, so a fixed rerun resumes cleanly
     from the checkpoint.
 
@@ -57,10 +59,13 @@ def stream_pipeline(
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     stream = reader.load(source_dir)
 
-    sink_path = os.path.join(catalog.scratch_dir, sink_table)
     checkpoint = os.path.join(catalog.scratch_dir, f"_checkpoints/{name}")
 
+    tables = [sink_table, *(t for t, _ in extra_sinks)]
+
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if committed_batch(catalog, name, tables, batch_id) is not None:
+            return  # committed before a crash cut the checkpoint commit
         out = transform(batch_df, ts)
         if expectations is not None:
             from data_migration_etl_scripts_spark.operators.expectations import (
@@ -68,23 +73,7 @@ def stream_pipeline(
             )
 
             enforce(expectations(out))  # fails the query pre-commit
-        if extra_sinks:
-            # dual-output loads (entity + crosswalk): materialize the
-            # transformed batch once, derive every sink from it
-            out = out.localCheckpoint()
-        # per-BATCH overwrite directories, not appends: a crash between
-        # any sink write and the checkpoint commit replays the batch,
-        # and an append would duplicate the wave (or leave the entity
-        # sink a wave ahead of its crosswalk). Per-batch dirs make the
-        # replay a byte-identical rewrite — the same discipline as
-        # cdc.py's idempotent mode and streaming/ingest.py; readers
-        # (catalog.read) list sink directories recursively.
-        sub = f"batch-{batch_id:06d}"
-        out.write.mode("overwrite").parquet(os.path.join(sink_path, sub))
-        for extra_table, fn in extra_sinks or ():
-            fn(out).write.mode("overwrite").parquet(
-                os.path.join(catalog.scratch_dir, extra_table, sub)
-            )
+        commit_batch(catalog, name, sink_table, extra_sinks, out, batch_id)
 
     query = (
         stream.writeStream.foreachBatch(sink_batch)
@@ -113,8 +102,8 @@ def stream_incremental_pipeline(
     them requires NOTHING extra: the same transform runs inside
     foreachBatch, RI gates raise pre-commit (failing the query so a
     fixed rerun resumes from the checkpoint), expectations gate the
-    batch, and extra sinks (dual-output crosswalks) append alongside
-    the main sink. Batch and streaming are the same pipeline spec with
+    batch, and extra sinks (dual-output crosswalks) commit with the
+    main sink. Batch and streaming are the same pipeline spec with
     a different extract: ``pk > watermark`` becomes file arrival.
     """
     return stream_pipeline(

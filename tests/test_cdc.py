@@ -4,6 +4,7 @@ monotone watermark, dual-output sinks)."""
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 
@@ -57,6 +58,11 @@ def test_full_load_then_resume_noop(cat):
 def test_batch_size_none_single_drain(cat):
     r = run_incremental(cat, orders_pipeline(cat), batch_size=None)
     assert r.batches == 1 and r.rows == 1500
+    # a second pipeline appending into the same sink: its first batch
+    # has the same start key but a directory named for its pipeline
+    again = dataclasses.replace(orders_pipeline(cat), name="orders_again")
+    assert run_incremental(cat, again, batch_size=None).rows == 1500
+    assert cat.read("orders_v2").count() == 3000
 
 
 def test_incremental_picks_up_only_new_rows(cat, spark):
@@ -288,14 +294,13 @@ def test_schema_evolution_merge_read(cat, spark):
 
 
 def test_idempotent_batches_survive_crash_replay(cat, monkeypatch):
-    """idempotent=True: a crash between batch write and watermark
-    advance replays the SAME batch into the SAME deterministic
-    directory — no duplicates."""
+    """A crash between a batch's commit and its watermark advance
+    rolls the committed batch forward on restart — no duplicates."""
     pipe = orders_pipeline(cat, transform=lambda df, ts: df.select("o_orderkey", "o_custkey"))
 
-    # crash after the last batch's write, before its advance: the
+    # crash after the last batch's commit, before its advance: the
     # watermark still holds the PREVIOUS batch boundary (1199) while
-    # the last batch's directory (batch-1499) is already on disk
+    # the last batch's directory (batch-orders-1199) is already on disk
     orig = WatermarkStore.advance
 
     def crashing_advance(self, name, mx):
@@ -305,16 +310,117 @@ def test_idempotent_batches_survive_crash_replay(cat, monkeypatch):
 
     monkeypatch.setattr(WatermarkStore, "advance", crashing_advance)
     with pytest.raises(RuntimeError, match="injected"):
-        run_incremental(cat, pipe, batch_size=600, idempotent=True)
+        run_incremental(cat, pipe, batch_size=600)
     monkeypatch.setattr(WatermarkStore, "advance", orig)
     store = WatermarkStore(cat.spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
     assert store.get("orders") == 1199
     assert cat.read("orders_v2").count() == 1500
 
-    # replay re-extracts the identical batch and overwrites the same directory
-    r2 = run_incremental(cat, pipe, batch_size=600, idempotent=True)
-    assert r2.rows == 300  # the replayed final batch (keys 1200-1499)
+    # the restart finds the batch's commit record and advances to its end
+    r2 = run_incremental(cat, pipe, batch_size=600)
+    assert r2.rows == 300  # the rolled-forward final batch (keys 1200-1499)
+    assert store.get("orders") == 1499
     assert cat.read("orders_v2").count() == 1500  # still no duplicates
+
+
+def _crash_every_advance(self, name, mx):
+    raise RuntimeError("injected crash: sink written, watermark not")
+
+
+def _distinct_count(df, col) -> tuple[int, int]:
+    return df.count(), df.select(col).distinct().count()
+
+
+def test_replay_after_source_grew_loads_each_key_once(cat, monkeypatch):
+    """The source grows past the old maximum between a crashed commit
+    and the restart. The restart rolls the committed batch forward to
+    its recorded end and loads only the new rows after it, instead of
+    recomputing a larger batch beside the committed one."""
+    grown = {"on": False}
+
+    def source():
+        src = cat.read("orders")
+        if not grown["on"]:
+            return src
+        return src.unionByName(src.withColumn("o_orderkey", F.col("o_orderkey") + 10_000))
+
+    pipe = IncrementalPipeline(
+        name="orders",
+        source=source,
+        watermark_col="o_orderkey",
+        sink_table="orders_v2",
+        transform=lambda df, ts: df.select("o_orderkey", "o_custkey"),
+    )
+    monkeypatch.setattr(WatermarkStore, "advance", _crash_every_advance)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_incremental(cat, pipe, batch_size=None)
+    monkeypatch.undo()
+    assert cat.read("orders_v2").count() == 1500
+
+    grown["on"] = True
+    r = run_incremental(cat, pipe, batch_size=None)
+    assert (r.rows, r.final_watermark) == (3000, 11_499)
+    assert _distinct_count(cat.read("orders_v2"), "o_orderkey") == (3000, 3000)
+
+
+def test_observed_gate_batch_replays_once_into_every_sink(cat, monkeypatch):
+    """observe_gates plus an extra sink: a crash after the commit and a
+    restart leave the main sink and the extra sink holding every row
+    once (the extra sink is staged and renamed like the main one)."""
+    pipe = IncrementalPipeline(
+        name="orders_obs_replay",
+        source=lambda: cat.read("orders"),
+        watermark_col="o_orderkey",
+        sink_table="orders_obs_v2",
+        transform=lambda df, ts: df.select("o_orderkey", "o_custkey"),
+        extra_sinks=(
+            ("orders_obs_sync", lambda df: df.select(F.col("o_orderkey").alias("old_id"))),
+        ),
+    )
+    monkeypatch.setattr(WatermarkStore, "advance", _crash_every_advance)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_incremental(cat, pipe, batch_size=None, observe_gates=["o_custkey"])
+    monkeypatch.undo()
+
+    r = run_incremental(cat, pipe, batch_size=None, observe_gates=["o_custkey"])
+    assert r.rows == 1500 and r.start_watermark is None
+    assert _distinct_count(cat.read("orders_obs_v2"), "o_orderkey") == (1500, 1500)
+    assert _distinct_count(cat.read("orders_obs_sync"), "old_id") == (1500, 1500)
+
+
+def test_commit_cut_between_renames_is_recomputed(cat, monkeypatch):
+    """A crash after the extra sink's rename and before the main sink's
+    leaves no commit record. The restart removes the extra sink's
+    orphaned directory, recomputes the batch, and both sinks hold every
+    row once."""
+    pipe = IncrementalPipeline(
+        name="orders_torn",
+        source=lambda: cat.read("orders"),
+        watermark_col="o_orderkey",
+        sink_table="orders_torn_v2",
+        transform=lambda df, ts: df.select("o_orderkey", "o_custkey"),
+        extra_sinks=(
+            ("orders_torn_sync", lambda df: df.select(F.col("o_orderkey").alias("old_id"))),
+        ),
+    )
+    rename = os.rename
+
+    def crash_before_main_rename(src, dst):
+        if "orders_torn_v2" in dst:
+            raise OSError("injected crash between renames")
+        return rename(src, dst)
+
+    monkeypatch.setattr(cdc_mod.os, "rename", crash_before_main_rename)
+    with pytest.raises(OSError, match="injected"):
+        run_incremental(cat, pipe, batch_size=None)
+    monkeypatch.undo()
+    assert cat.read("orders_torn_sync").count() == 1500  # the orphan
+    assert not os.path.exists(os.path.join(cat.scratch_dir, "orders_torn_v2", "batch-orders_torn-none"))
+
+    r = run_incremental(cat, pipe, batch_size=None)
+    assert (r.batches, r.rows) == (1, 1500)
+    assert _distinct_count(cat.read("orders_torn_v2"), "o_orderkey") == (1500, 1500)
+    assert _distinct_count(cat.read("orders_torn_sync"), "old_id") == (1500, 1500)
 
 
 def test_expectations_gate_aborts_batch_before_write(cat):

@@ -1,8 +1,11 @@
 """DAG-level crash-replay chaos: kill a pipeline between its sink
 write and its watermark advance, restart the whole DAG, and require
 every sink to match the uninterrupted run — provable because
-``idempotent=True`` writes deterministic per-batch directories
-(cdc.py) and the runner passes it through to every node."""
+``cdc.commit_batch`` names each batch's sink directories by the
+pipeline and its start watermark and records the batch's end in them,
+so the restart rolls the committed batch forward on every node instead
+of recomputing it (categories, which anti-joins against its own sink,
+would otherwise drop its whole batch)."""
 
 from __future__ import annotations
 
@@ -14,6 +17,7 @@ from pyspark.sql import functions as F  # noqa: F401 (fixture parity imports)
 from data_migration_etl_scripts_spark import cdc
 from data_migration_etl_scripts_spark.catalog import Catalog
 from data_migration_etl_scripts_spark.pipelines import (
+    categories_pipeline,
     subusers_pipeline,
 )
 from data_migration_etl_scripts_spark.pipelines.registry import (
@@ -29,19 +33,27 @@ from tests.v1fixtures import (
 )
 
 TS = dt.datetime(2026, 1, 1, 12, 0, 0)
-SINKS = ["MakesV2", "AccountsV2Out", "SubUsersV2", "UnitsV2Out", "SyncUnits"]
+SINKS = [
+    "MakesV2", "AccountsV2Out", "SubUsersV2", "UnitsV2Out", "SyncUnits",
+    "CategoriesV2", "SyncCategories",
+]
+VICTIM_SINK = {
+    "accounts": "AccountsV2Out", "units": "UnitsV2Out", "categories": "CategoriesV2"
+}
 
 
 def _mini_dag(cat: Catalog) -> DagRunner:
-    """A 5-node slice of the reference DAG: two independent roots, an
-    entity, a dependent, and a crosswalk — enough shape for a crash to
-    block a subtree."""
+    """A 6-node slice of the reference DAG: two independent roots, an
+    entity, a dependent, a crosswalk, and a dual-output node that
+    anti-joins against its own sink — enough shape for a crash to block
+    a subtree."""
     r = DagRunner(cat)
     r.add(build_dimension(cat, "makes"))
     r.add(build_dimension(cat, "units"))
     r.add(build_sync(cat, "sync_units"))
     r.add(build_entity(cat, "accounts"))
     r.add(subusers_pipeline(cat), depends_on=["accounts"])
+    r.add(categories_pipeline(cat))
     return r
 
 
@@ -109,13 +121,13 @@ def test_truncated_staged_part_aborts_before_promotion(spark, tmp_path, monkeypa
     assert sorted(tuple(r) for r in cat.read("MakesV2").collect()) == want
 
 
-@pytest.mark.parametrize("victim", ["accounts", "units"])
+@pytest.mark.parametrize("victim", ["accounts", "units", "categories"])
 def test_dag_crash_between_write_and_watermark_replays_identically(
     spark, tmp_path, monkeypatch, victim
 ):
     # ---- uninterrupted twin run
     clean = _fixtures(spark, tmp_path / "clean")
-    report = _mini_dag(clean).run(batch_ts=TS, idempotent=True)
+    report = _mini_dag(clean).run(batch_ts=TS)
     assert report.ok
     want = _sink_rows(clean)
 
@@ -132,21 +144,21 @@ def test_dag_crash_between_write_and_watermark_replays_identically(
         return orig(self, name, mx)
 
     monkeypatch.setattr(cdc.WatermarkStore, "advance", crashing_advance)
-    r1 = _mini_dag(cat).run(batch_ts=TS, idempotent=True)
+    r1 = _mini_dag(cat).run(batch_ts=TS)
     assert [f.name for f in r1.failures] == [victim]
     # the victim's sink files are ALREADY on disk (the crash window)
-    assert cat.exists({"accounts": "AccountsV2Out", "units": "UnitsV2Out"}[victim])
+    assert cat.exists(VICTIM_SINK[victim])
     if victim == "accounts":
         assert "subusers" in r1.skipped  # downstream blocked
 
-    # ---- restart: watermark still behind, the victim replays into the
-    # SAME deterministic batch directory; everything downstream runs
+    # ---- restart: watermark still behind, the victim rolls its
+    # committed batch forward; everything downstream runs
     monkeypatch.setattr(cdc.WatermarkStore, "advance", orig)
-    r2 = _mini_dag(cat).run(batch_ts=TS, idempotent=True)
+    r2 = _mini_dag(cat).run(batch_ts=TS)
     assert r2.ok
     assert _sink_rows(cat) == want  # byte-equal rows, zero duplicates
 
     # ---- and a THIRD run is a pure no-op (watermarks at max)
-    r3 = _mini_dag(cat).run(batch_ts=TS, idempotent=True)
+    r3 = _mini_dag(cat).run(batch_ts=TS)
     assert r3.ok and all(b.rows == 0 for b in r3.results.values())
     assert _sink_rows(cat) == want

@@ -157,6 +157,31 @@ def test_categories_pipeline_dedup_antijoin_dual_output(cat):
     assert names_900 == ["Brakes", "Oil", "Tyres"]  # 'Oil' not duplicated
 
 
+def test_categories_crash_replay_keeps_its_own_batch(cat, monkeypatch):
+    """categories anti-joins against its own sink. A crash after the
+    commit and before the watermark advance must not make the restart
+    anti-join the committed batch away: it rolls forward instead, and
+    both sinks equal an uninterrupted run."""
+    from data_migration_etl_scripts_spark.cdc import WatermarkStore
+
+    orig = WatermarkStore.advance
+
+    def crashing_advance(self, name, mx):
+        raise RuntimeError("injected crash: sink written, watermark not")
+
+    monkeypatch.setattr(WatermarkStore, "advance", crashing_advance)
+    with pytest.raises(RuntimeError, match="injected"):
+        run_incremental(cat, categories_pipeline(cat), batch_size=None, batch_ts=TS)
+    monkeypatch.setattr(WatermarkStore, "advance", orig)
+
+    r = run_incremental(cat, categories_pipeline(cat), batch_size=None, batch_ts=TS)
+    assert r.batches == 1 and r.final_watermark is not None
+    kept = {(r.AccountID, r.Name): r.CategoryID for r in cat.read("CategoriesV2").collect()}
+    assert kept == {(900, "Oil"): 101, (900, "Tyres"): 102, (901, "Oil"): 103}
+    sync = sorted(tuple(r) for r in cat.read("SyncCategories").collect())
+    assert sync == [(101, 900, "Oil"), (102, 900, "Tyres"), (103, 901, "Oil")]
+
+
 def test_orders_pipeline_preagg_repair_and_gates(cat):
     pipe = orders_pipeline(
         cat,

@@ -355,8 +355,8 @@ def test_registry_gated_entity_stream_gate_blocks_then_resumes(spark, cat, tmp_p
 def test_stream_pipeline_checkpoint_loss_replay_does_not_duplicate(spark, cat, tmp_path):
     """Per-batch-dir sinks: replaying a committed wave (checkpoint lost
     — the worst stand-in for a crash between sink write and commit)
-    must rewrite the same directories, never append duplicates, for
-    the main AND extra sinks."""
+    must find the wave's commit record and skip it, never append
+    duplicates, for the main AND extra sinks."""
     src = str(tmp_path / "src")
     os.makedirs(src)
     _mk_events(spark, [_event(1, 0), _event(2, 1)]).coalesce(1).write.mode(
@@ -372,5 +372,5 @@ def test_stream_pipeline_checkpoint_loss_replay_does_not_duplicate(spark, cat, t
 
     shutil.rmtree(os.path.join(cat.scratch_dir, "_checkpoints/evr"))
     stream_pipeline(spark, cat, **kw)
-    assert cat.read("EventsV2R").count() == 2  # rewrite, not append
+    assert cat.read("EventsV2R").count() == 2  # skipped, not appended
     assert cat.read("EventsMirror").count() == 2
