@@ -13,9 +13,12 @@ catalog; nothing below assumes local paths beyond ``os.path`` joins.
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 #: Tables the driver-provided testdata ships (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -30,6 +33,54 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+#: footer key under which Spark stores the schema of the rows it writes
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _listed(name: str) -> bool:
+    """Whether Spark's file listing keeps a file or directory name:
+    it skips ``_``- and ``.``-prefixed names (unless they hold ``=``)
+    and in-flight ``._COPYING_`` copies."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _footer_schema(path: str) -> T.StructType | None:
+    """The schema Spark's non-merging inference would give the table at
+    ``path``, read on the driver without a Spark job.
+
+    That inference reads the footer of the first data file in path
+    order and takes the Spark row metadata stored there. The same file
+    and the same JSON are read here with pyarrow. Returns None, leaving
+    inference to Spark, when the table is hive-partitioned, has summary
+    files (``_metadata``, ``_common_metadata``), or its first file holds
+    no Spark row metadata (a file not written by Spark).
+    """
+    files = []
+    if os.path.isdir(path):
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if _listed(d)]
+            if any("=" in d for d in dirs):
+                return None
+            if any(n.startswith(("_metadata", "_common_metadata")) for n in names):
+                return None
+            files += [os.path.join(root, n) for n in names if _listed(n)]
+    else:
+        files.append(path)
+    if not files:
+        return None
+    try:
+        raw = pq.read_metadata(min(files)).metadata or {}
+        if _SPARK_ROW_METADATA not in raw:
+            return None
+        return T.StructType.fromJson(json.loads(raw[_SPARK_ROW_METADATA]))
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
 
 
 class Catalog:
@@ -57,11 +108,18 @@ class Catalog:
         raise KeyError(f"table not found in catalog: {name!r} under {self.base_dir}")
 
     def read(self, name: str, merge_schema: bool = False) -> DataFrame:
-        """``merge_schema=True`` unions column sets across the table's
+        """The table ``name`` as a DataFrame, with no Spark job when
+        Spark wrote it: its schema comes from the footer of its first
+        data file, read on the driver (:func:`_footer_schema`), which is
+        the file and the schema Spark's own inference would read. Other
+        tables (hive-partitioned, with summary files, or not written by
+        Spark) keep Spark's inference and its job.
+
+        ``merge_schema=True`` unions column sets across the table's
         files — the parquet equivalent of the reference's idempotent
         ``ALTER TABLE ADD Old<X>ID`` guards (S10): a batch appended
         with a new column widens the table, earlier files read it as
-        null."""
+        null. It always infers with Spark, which reads every footer."""
         reader = self.spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
@@ -76,6 +134,9 @@ class Catalog:
             for e in os.listdir(p)
         ):
             reader = reader.option("recursiveFileLookup", "true")
+        schema = None if merge_schema else _footer_schema(p)
+        if schema is not None:
+            reader = reader.schema(schema)
         return reader.parquet(p)
 
     def register_all(self, names: tuple[str, ...] = TESTDATA_TABLES) -> None:

@@ -12,9 +12,14 @@ Spark-first re-expression:
   on the driver with pyarrow (no Spark job) and replaced atomically
   with ``os.replace`` on each advance; ``run_incremental`` reads it
   once per call (on a real deployment: Delta + MERGE INTO);
-- extraction = ``where(pk > wm).orderBy(pk).limit(N)`` — Catalyst
-  pushes the range predicate into the scan (parquet row-group pruning /
-  JDBC WHERE);
+- extraction = ``where(pk > wm)``, then one bookkeeping query per
+  batch that returns the batch's row count and end watermark: the
+  sorted head of N + 1 rows, or a plain aggregate for a full drain; a
+  batch cut inside the source adds one unsorted aggregate that aligns
+  its end with ties (:func:`_next_batch`). The transform reads the
+  source again, bounded by ``pk <= end``; nothing is cached. Catalyst
+  pushes both range predicates into the scan (parquet row-group
+  pruning / JDBC WHERE);
 - failure model = one commit per batch (:func:`commit_batch`): staged
   write, gate check, part validation, then one rename per sink into
   ``batch-<pipeline>-<key>``, the main sink last with a commit record;
@@ -252,9 +257,12 @@ def commit_batch(
     ``<sink>/batch-<name>-<key>``, the main sink last, carrying
     ``record``: the batch counts as committed (:func:`committed_batch`)
     only once every sink holds it. A failure before the renames leaves
-    every sink untouched; an existing batch directory is never replaced.
+    every sink untouched, and a failed rename leaves no empty sink
+    directory that the commit made for it; an existing batch directory
+    is never replaced.
     """
     staging = os.path.join("_staging", name)
+    created = []  # sink directories this commit made
     try:
         if gates:
             df, gate = observed_gate(df, *gates, context=name)
@@ -272,10 +280,80 @@ def commit_batch(
         staged[sink_table] = main  # renamed last: its record marks the commit
         for table, path in staged.items():
             target = _batch_dir(catalog, table, name, key)
-            os.makedirs(os.path.dirname(target), exist_ok=True)
+            sink = os.path.dirname(target)
+            if not os.path.isdir(sink):
+                os.makedirs(sink)
+                created.append(sink)
             os.rename(path, target)
     finally:
         shutil.rmtree(os.path.join(catalog.scratch_dir, staging), ignore_errors=True)
+        for sink in created:  # a cut commit leaves no empty sink behind
+            with contextlib.suppress(OSError):
+                os.rmdir(sink)  # only if the rename into it never happened
+
+
+def _next_batch(
+    remaining: DataFrame, wm_col: str, batch_size: int | None, name: str
+) -> tuple[int, int] | None:
+    """``(rows, end watermark)`` of the next batch of ``remaining``, or
+    None when it is empty: one Spark query, two for a full batch.
+
+    With ``batch_size=None`` the batch is everything left, ending at its
+    maximum. A numeric ``batch_size`` gives a WATERMARK-ALIGNED batch:
+    the first ``batch_size`` rows in watermark order plus every row tied
+    with the last of them. With a unique watermark column this is
+    exactly the limit; with a NON-unique one (roles' GroupID, any fact
+    keyed by a parent id) a plain limit could cut mid-group, and the
+    rows tied with the boundary beyond the limit would be skipped
+    FOREVER once the watermark advanced past their value.
+    """
+    wm = F.col(wm_col)
+    stats = (
+        F.count(F.lit(1)).alias("n"),
+        F.max(wm).alias("mx"),
+        F.count_if(wm.isNull()).alias("n_null"),
+    )
+    if batch_size is None:
+        n, end, n_null = remaining.agg(*stats).collect()[0]
+    else:
+        if batch_size < 1:
+            raise ValueError(f"{name}: batch_size must be >= 1 or None, got {batch_size}")
+        # one row past the batch tells whether anything is left beyond it
+        n, end, n_null = (
+            remaining.orderBy(wm).limit(batch_size + 1).agg(*stats).collect()[0]
+        )
+    if n == 0:
+        return None
+    if n_null and batch_size is not None:
+        # NULLs sort FIRST, so any null-watermark row lands in the head.
+        # They must fail loudly: the `<=` batch bound is null-safe-false
+        # (silent drop), and once the watermark advances, `> wm`
+        # excludes them FOREVER.
+        raise ValueError(
+            f"{name}: watermark column {wm_col!r} has "
+            f"{n_null} NULL row(s) — watermark-aligned "
+            "batching requires a non-null watermark; clean the "
+            "source or run with batch_size=None"
+        )
+    if end is None:
+        raise ValueError(
+            f"{name}: watermark column {wm_col!r} is NULL in all {n} remaining "
+            "row(s) — there is no end watermark to advance to"
+        )
+    if batch_size is not None and n > batch_size:
+        # Full batch. ``cut`` (the head's max) is the (batch_size+1)-th
+        # value. If fewer than batch_size rows lie below it, the
+        # batch_size-th value ties with it: the batch is every row <= cut.
+        # Otherwise it ends at the largest value below the cut.
+        cut = end
+        below = wm < F.lit(cut)
+        n_lt, mx_lt, n_le = (
+            remaining.where(wm <= F.lit(cut))
+            .agg(F.count_if(below), F.max(F.when(below, wm)), F.count(F.lit(1)))
+            .collect()[0]
+        )
+        n, end = (n_lt, mx_lt) if n_lt == batch_size else (n_le, cut)
+    return n, int(end)
 
 
 def run_incremental(
@@ -293,6 +371,18 @@ def run_incremental(
     compiles to TakeOrderedAndProject, which allocates a top-N heap of
     that capacity per partition: keep it in the 1e3..1e6 range (the
     reference uses 100..15000), never "a huge number meaning all".
+
+    Query budget per batch, before the transform: one Spark query finds
+    the batch's rows and end watermark (a count/max aggregate with
+    ``batch_size=None``, else the sorted head of ``batch_size + 1``
+    rows); only a full numeric batch adds a second, unsorted aggregate
+    over ``wm <= cut`` that places its end at a tie boundary. The
+    source and sink reads add no schema-inference job (``Catalog.read``
+    takes a Spark-written table's schema from its footer). The
+    transform reads the source bounded by ``wm <= end``, so rows that
+    arrive past the end wait for the next batch; null-watermark rows
+    ride the first ``batch_size=None`` batch and are refused by a
+    numeric one.
 
     ``observe_gates``: RI-gate columns checked via ``df.observe``
     metrics that ride the staged write of :func:`commit_batch` — one
@@ -326,68 +416,25 @@ def run_incremental(
             continue
         source = pipeline.source()
         remaining = source if wm is None else source.where(F.col(wm_col) > F.lit(wm))
-        if batch_size is None:
-            batch = remaining
-        else:
-            # WATERMARK-ALIGNED batching: take the first batch_size rows
-            # to find the boundary value, then include EVERY row <= it.
-            # With a unique watermark column this is exactly the limit;
-            # with a NON-unique one (roles' GroupID, any fact keyed by a
-            # parent id) a plain limit could cut mid-group — the rows
-            # tied with the boundary beyond the limit would be skipped
-            # FOREVER once the watermark advances past their value.
-            head = (
-                remaining.orderBy(F.col(wm_col))
-                .limit(batch_size)
-                .agg(
-                    F.max(wm_col).alias("mx"),
-                    F.sum(F.col(wm_col).isNull().cast("long")).alias("n_null"),
-                    F.count(F.lit(1)).alias("n"),
-                )
-                .collect()[0]
-            )
-            if head["n"] == 0:
-                break
-            # NULLs sort FIRST, so any null-watermark row lands in the
-            # head batch. They must fail loudly: the `<=` boundary
-            # filter below is null-safe-false (silent drop), and once
-            # the watermark advances, `> wm` excludes them FOREVER.
-            # (The pre-r5 behavior was worse in a different way — an
-            # all-null head made head_mx None and the loop broke with
-            # non-null rows still pending.)
-            if head["n_null"]:
-                raise ValueError(
-                    f"{pipeline.name}: watermark column {wm_col!r} has "
-                    f"{head['n_null']} NULL row(s) — watermark-aligned "
-                    "batching requires a non-null watermark; clean the "
-                    "source or run with batch_size=None"
-                )
-            head_mx = head["mx"]
-            batch = remaining.where(F.col(wm_col) <= F.lit(head_mx))
-        # cache: the batch feeds the watermark max and the transform
-        batch = batch.cache()
-        try:
-            agg = batch.agg(
-                F.count(F.lit(1)).alias("n"), F.max(wm_col).alias("mx")
-            ).collect()[0]
-            if agg["n"] == 0:
-                break
-            loaded = pipeline.transform(batch, ts)  # action-gates raise here, pre-write
-            if pipeline.expectations is not None:
-                from data_migration_etl_scripts_spark.operators.expectations import (
-                    enforce,
-                )
+        bounds = _next_batch(remaining, wm_col, batch_size, pipeline.name)
+        if bounds is None:
+            break
+        rows, end = bounds
+        # bounded by the counted end: rows arriving past it wait for the
+        # next batch. Null-watermark rows can only be left in a first
+        # batch_size=None batch, and ride it.
+        batch = remaining.where((F.col(wm_col) <= F.lit(end)) | F.col(wm_col).isNull())
+        loaded = pipeline.transform(batch, ts)  # action-gates raise here, pre-write
+        if pipeline.expectations is not None:
+            from data_migration_etl_scripts_spark.operators.expectations import enforce
 
-                enforce(pipeline.expectations(loaded))  # aborts pre-write
-            record = {"end": int(agg["mx"]), "rows": int(agg["n"])}
-            commit_batch(catalog, pipeline.name, pipeline.sink_table,
-                         pipeline.extra_sinks, loaded, key, observe_gates, record)
-            wm = record["end"]
-            store.advance(pipeline.name, wm)
-            total_rows += record["rows"]
-            batches += 1
-        finally:
-            batch.unpersist()
+            enforce(pipeline.expectations(loaded))  # aborts pre-write
+        commit_batch(catalog, pipeline.name, pipeline.sink_table, pipeline.extra_sinks,
+                     loaded, key, observe_gates, {"end": end, "rows": rows})
+        wm = end
+        store.advance(pipeline.name, wm)
+        total_rows += rows
+        batches += 1
 
     return BatchResult(
         batches=batches, rows=total_rows, final_watermark=wm, start_watermark=start_wm

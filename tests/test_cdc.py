@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import dataclasses
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -181,21 +180,9 @@ def test_watermark_reads_table_written_by_spark(cat, spark):
     assert sorted(tuple(r) for r in back.collect()) == [("a", 5), ("b", 8), ("c", 9)]
 
 
-def test_watermark_store_starts_no_spark_job(cat, spark):
-    """get and advance run on the driver: a job group around them
-    collects no job. A Spark action in a second group, run after them,
-    shows the status tracker is recording (its listener is asynchronous
-    but in order, so once the probe job shows, an earlier job would)."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
+def test_watermark_store_starts_no_spark_job(cat, spark, jobs_started):
+    """get and advance run on the driver: they start no Spark job."""
     store = WatermarkStore(spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
-
-    def in_group(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
 
     def store_ops():
         assert store.get("t") is None
@@ -203,13 +190,7 @@ def test_watermark_store_starts_no_spark_job(cat, spark):
         store.advance("t", 2)
         assert store.get("t") == 2
 
-    in_group("wm_store", store_ops)
-    in_group("wm_probe", lambda: spark.range(3).count())
-    deadline = time.monotonic() + 10
-    while not list(tracker.getJobIdsForGroup("wm_probe")) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert list(tracker.getJobIdsForGroup("wm_probe"))
-    assert list(tracker.getJobIdsForGroup("wm_store")) == []
+    assert jobs_started(store_ops) == 0
 
 
 def test_watermark_zero_key_not_skipped(cat, spark):
@@ -414,6 +395,7 @@ def test_commit_cut_between_renames_is_recomputed(cat, monkeypatch):
     with pytest.raises(OSError, match="injected"):
         run_incremental(cat, pipe, batch_size=None)
     monkeypatch.undo()
+    assert not cat.exists("orders_torn_v2")
     assert cat.read("orders_torn_sync").count() == 1500  # the orphan
     assert not os.path.exists(os.path.join(cat.scratch_dir, "orders_torn_v2", "batch-orders_torn-none"))
 
@@ -503,3 +485,101 @@ def test_null_watermark_rows_fail_loudly(cat, spark):
     assert not cat.exists("NullWmV2")
     store = WatermarkStore(spark, os.path.join(cat.scratch_dir, "_etl_cdc"))
     assert store.get("nullwm") is None
+
+
+def _reference_batches(values, batch_size):
+    """Brute force over the watermark values of the source: each batch
+    is the first ``batch_size`` values past the watermark plus every
+    value tied with the last of them. Returns (rows, end) per batch."""
+    out, wm = [], None
+    while rest := sorted(v for v in values if wm is None or v > wm):
+        wm = rest[min(batch_size, len(rest)) - 1]
+        out.append((sum(v <= wm for v in rest), wm))
+    return out
+
+
+def _drain(cat, pipe, batch_size):
+    """(rows, watermark after it) of each batch, one call per batch."""
+    steps = []
+    while (r := run_incremental(cat, pipe, batch_size=batch_size, max_batches=1)).batches:
+        steps.append((r.rows, r.final_watermark))
+    return steps
+
+
+def _keyed_source(cat, spark, name, values):
+    """A source table of (wm, row_id) rows, written in a scrambled order
+    over three files, so the head's top-K merges partial heads."""
+    rows = [(v, i) for i, v in enumerate(values)]
+    df = spark.createDataFrame(rows, "wm long, row_id long")
+    cat.write(df.orderBy(F.xxhash64("row_id")).repartition(3), name)
+    return IncrementalPipeline(
+        name=name, source=lambda: cat.read(name), watermark_col="wm",
+        sink_table=f"{name}_v2",
+    )
+
+
+UNIQUE = list(range(12))
+#: tie groups: one straddling the batch_size+1 limit, one ending at it,
+#: one whole group past it
+TIED = [1, 1, 2, 2, 2, 2, 3, 4, 4, 5, 6, 7, 7, 7]
+
+
+@pytest.mark.parametrize(
+    "values, batch_size",
+    [(UNIQUE, 12), (UNIQUE, 5), (TIED, 3), (TIED, 4)],
+    ids=["fits", "no_tie_at_cut", "ties_cross_limit", "ties_then_fits"],
+)
+def test_batch_boundaries_match_brute_force(cat, spark, values, batch_size):
+    """Batches, rows and every intermediate watermark equal the brute
+    force, the sink holds every source row once, and no batch is left
+    cached."""
+    spark.catalog.clearCache()
+    pipe = _keyed_source(cat, spark, "bounds", values)
+    assert _drain(cat, pipe, batch_size) == _reference_batches(values, batch_size)
+    got = sorted(r.row_id for r in cat.read("bounds_v2").select("row_id").collect())
+    assert got == list(range(len(values)))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_null_watermark_rows_ride_the_unbounded_batch(cat, spark):
+    """batch_size=None loads null-watermark rows with the first batch,
+    which ends at the largest non-null value (a numeric batch_size
+    refuses them: test_null_watermark_rows_fail_loudly); a source whose
+    every watermark is null fails, since there is no end watermark to
+    advance to."""
+    pipe = _keyed_source(cat, spark, "nulls", [None, 3, None, 1, 2])
+    assert _drain(cat, pipe, None) == [(5, 3)]
+    assert cat.read("nulls_v2").count() == 5
+
+    only_nulls = _keyed_source(cat, spark, "all_null", [None, None])
+    with pytest.raises(ValueError, match="NULL in all 2"):
+        run_incremental(cat, only_nulls, batch_size=None)
+    assert not cat.exists("all_null_v2")
+
+
+def test_batch_size_below_one_is_refused(cat):
+    with pytest.raises(ValueError, match="batch_size must be >= 1"):
+        run_incremental(cat, orders_pipeline(cat), batch_size=0)
+
+
+#: Spark jobs of (one batch, the empty probe after it) per batch_size:
+#: the bookkeeping query (an aggregate is a shuffle-map job and a result
+#: job under AQE; the sorted head is one job) plus the batch's write
+BATCH_JOBS = {None: (3, 2), 1500: (2, 1)}
+
+
+@pytest.mark.parametrize("batch_size", [None, 1500])
+def test_batch_job_budget(cat, jobs_started, batch_size):
+    """One bookkeeping query per batch and nothing else: draining a
+    Spark-written source in one batch, and the empty probe after it,
+    start the pinned number of Spark jobs (no cache, no schema
+    inference)."""
+    cat.write(cat.read("orders"), "orders_src")
+    pipe = dataclasses.replace(orders_pipeline(cat), source=lambda: cat.read("orders_src"))
+
+    def one_batch():
+        return run_incremental(cat, pipe, batch_size=batch_size, max_batches=1)
+
+    assert (jobs_started(one_batch), jobs_started(one_batch)) == BATCH_JOBS[batch_size]
+    assert run_incremental(cat, pipe, batch_size=batch_size).final_watermark == 1499
+    assert cat.read("orders_v2").count() == 1500

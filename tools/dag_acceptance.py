@@ -22,6 +22,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import shutil
 import sys
 import tempfile
 
@@ -38,9 +39,22 @@ def main() -> int:
     if "--json" in sys.argv:
         json_path = sys.argv[sys.argv.index("--json") + 1]
 
+    from data_migration_etl_scripts_spark import get_spark
+
+    spark = get_spark(shuffle_partitions=8)
+    tmp = tempfile.mkdtemp(prefix="dag_acceptance_")
+    try:
+        return accept(spark, tmp, update, json_path)
+    finally:
+        spark.stop()
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def accept(spark, tmp: str, update: bool, json_path: str | None) -> int:
+    """Build the fixtures in a catalog under ``tmp``, run the DAG there
+    and check (or with ``update``, pin) every sink's hash."""
     from pyspark.sql import functions as F
 
-    from data_migration_etl_scripts_spark import get_spark
     from data_migration_etl_scripts_spark.catalog import Catalog
     from data_migration_etl_scripts_spark.plans.reference_dag import (
         build_reference_dag,
@@ -54,8 +68,6 @@ def main() -> int:
     )
     from tools.selfcheck import table_hash
 
-    spark = get_spark(shuffle_partitions=8)
-    tmp = tempfile.mkdtemp(prefix="dag_acceptance_")
     cat = Catalog(spark, base_dir=tmp, scratch_dir=tmp)
     build_v1_fixtures(cat)
     build_v1_fixtures_extra(cat)
@@ -156,7 +168,6 @@ def main() -> int:
                 f, indent=1, sort_keys=True,
             )
         print(f"artifact: {json_path}")
-    spark.stop()
     return 0 if run_ok and not bad else 1
 
 
