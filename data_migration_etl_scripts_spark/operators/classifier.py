@@ -121,7 +121,6 @@ def train_logreg(
     twin bit for bit)."""
     import os
 
-    n_docs = labels.count()
     # the feature row count rides the checkpoint action: a separate
     # feats.count() would be a second scan spent only on picking the
     # driver-vs-distributed path
@@ -139,10 +138,13 @@ def train_logreg(
     # Above the cap the distributed loop below is untouched.
     cap = int(os.environ.get("SPARK_GRAFT_LOGREG_DRIVER_ROWS", 2_000_000))
     if counts["n"] <= cap:
-        got = _train_logreg_driver(feats, labels, rounds, lr, n_docs)
+        got = _train_logreg_driver(feats, labels, rounds, lr)
         if got is not None:
             return got
-    labels = labels.localCheckpoint(eager=True)
+    # the label count (the gradient's divisor) rides the labels'
+    # checkpoint; the driver path takes it from its collect instead
+    labels, label_stats = checkpoint_observed(labels, n=F.count(F.lit(1)))
+    n_docs = label_stats["n"]
     w: dict[int, float] = {}
     for _ in range(rounds):
         if w:
@@ -247,7 +249,7 @@ def _round9(v: float) -> float:
 
 
 def _train_logreg_driver(
-    feats: DataFrame, labels: DataFrame, rounds: int, lr: float, n_docs: int
+    feats: DataFrame, labels: DataFrame, rounds: int, lr: float
 ) -> dict[int, float] | None:
     """Driver-resident GD over the collected feature rows — the exact
     per-op replica of the distributed loop in :func:`train_logreg`
@@ -289,6 +291,8 @@ def _train_logreg_driver(
         or fpdf["h"].isna().any()
     ):
         return None
+    # labels.count(), without its job: every label row is collected
+    n_docs = len(lpdf)
     docs = lpdf["doc_id"].tolist()
     y_by_doc = dict(zip(docs, lpdf["y"].tolist()))
     # factorized indices: di over LABELED docs (rows of unlabeled docs

@@ -410,12 +410,15 @@ def ppjoin_pairs(
     filter (t*na <= nb <= na/t), then exact verification counts the
     full intersection.
 
-    Scale shape: one vocab-frequency shuffle; per-doc ordering is a
-    doc-partitioned window (NO global sort); the candidate join is
-    bounded by prefix length (~(1-t)*|d| rows per doc) and rare
-    tokens first — the hot-token explosion naive shingle joins hit
-    cannot occur because ubiquitous tokens sit at the END of every
-    ordering, outside the prefixes.
+    Scale shape: one vocab-frequency shuffle, then ONE per-doc
+    aggregate (size, rarity-ordered tokens, sorted token array) that
+    is checkpointed once; per-doc ordering is an in-row array sort
+    (NO window, NO global sort), and the prefix is a narrow slice +
+    posexplode of that checkpoint. The candidate join is bounded by
+    prefix length (~(1-t)*|d| rows per doc) and rare tokens first —
+    the hot-token explosion naive shingle joins hit cannot occur
+    because ubiquitous tokens sit at the END of every ordering,
+    outside the prefixes.
 
     Degenerate-vocab note: on corpora whose distinct-token universe is
     tiny relative to doc count (the synthetic test tables), even rare
@@ -433,9 +436,9 @@ def ppjoin_pairs(
     widen ``shingle_n`` — SCALE.md's measured advice); above
     ``max_candidates`` (opt-in) the join refuses with ValueError so a
     cluster never discovers the quadratic at hour three. The
-    estimate's one aggregate is the action that materializes the
-    lazily checkpointed prefix relation the join then reads, so the
-    pre-flight costs a fraction of the join."""
+    estimate is one aggregate over the prefix, a narrow projection of
+    the per-doc checkpoint, so the pre-flight costs a fraction of the
+    join."""
     num, den = _rational(threshold)
 
     def ceil_tn(ncol):
@@ -449,41 +452,35 @@ def ppjoin_pairs(
         tp.tokens(text_col) if shingle_n <= 1
         else tp.word_shingles(tp.tokens(text_col), n=shingle_n)
     )
-    # five downstream consumers (freq, ordering, sizes, both
-    # verification sides) would each re-run the tokenize+explode+
-    # distinct subtree: materialize the feature relation once. The
-    # broadcast-bound doc count rides that checkpoint's action;
-    # approx_count_distinct is enough for a plan-shape gate (observe()
-    # rejects exact DISTINCT aggregates), and the result set is
-    # hint-independent.
-    tok, tok_stats = checkpoint_observed(
-        df.select(F.col(id_col).alias("doc_id"), F.explode(feat).alias("tok"))
-        .distinct(),
-        nd=F.approx_count_distinct("doc_id"),
-    )
+    tok = df.select(
+        F.col(id_col).alias("doc_id"), F.explode(feat).alias("tok")
+    ).distinct()
     freq = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("freq"))
-    # per-doc size via the sizes aggregate + broadcast join-back — a
-    # COUNT window over the doc partition was tried (one less shuffle
-    # on paper) and REVERTED on measurement: the unbounded window
-    # buffers every doc's rows in a second Window pass and benched
-    # consistently slower than the hash-join attach at sf0.1.
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    with_n = tok.join(freq, "tok").join(sizes, "doc_id").select(
-        "doc_id",
-        "tok",
-        F.row_number().over(
-            Window.partitionBy("doc_id").orderBy("freq", "tok")
-        ).alias("pos"),
-        "n",
+    # ONE per-doc aggregate carries everything downstream reads: the
+    # size n, the rarity order (freq asc, tok asc — tokens are distinct
+    # per doc, so the order is total) and the sorted token array the
+    # verification intersects. It is materialized once, by an eager
+    # checkpoint whose action also counts its rows: one row per doc,
+    # so nd is the exact doc count the broadcast gate reads. Under AQE
+    # every shuffle stage below a build-time action is a serial job of
+    # its own, so the tok relation feeds this one aggregate only.
+    docs, doc_stats = checkpoint_observed(
+        tok.join(freq, "tok").groupBy("doc_id").agg(
+            F.count(F.lit(1)).alias("n"),
+            F.array_sort(F.collect_list(F.struct("freq", "tok"))).alias("ord"),
+            F.sort_array(F.collect_list("tok")).alias("toks"),
+        ),
+        nd=F.count(F.lit(1)),
     )
-    # prefix is a LAZY localCheckpoint: it materializes inside the
-    # pre-flight estimate collect (the first action over the plan), so
-    # the freq join + sizes join + ordering window run ONCE per call
-    # instead of once in the estimate job and again in the candidate
-    # join, with no serial job of its own.
-    prefix = with_n.where(
-        F.col("pos") <= F.col("n") - ceil_tn(F.col("n")) + 1
-    ).select("doc_id", "tok", "n", "pos").localCheckpoint(eager=False)
+    # the prefix (first n - ceil(t*n) + 1 tokens in rarity order) is a
+    # narrow projection of the checkpoint: no shuffle, no window
+    prefix = docs.select(
+        "doc_id", "n",
+        F.posexplode(
+            F.slice("ord", F.lit(1), F.col("n") - ceil_tn(F.col("n")) + 1)
+        ).alias("pos", "ft"),
+    ).select("doc_id", F.col("ft.tok").alias("tok"), "n",
+             (F.col("pos") + 1).alias("pos"))
     if warn_candidates is not None or max_candidates is not None:
         est = ppjoin_candidate_estimate(prefix)
         knobs = (
@@ -566,13 +563,10 @@ def ppjoin_pairs(
     # is two shuffles of the CANDIDATE set, never an explode.
     # n rides the candidate set, so the verification never
     # re-attaches sizes.
-    arrs = tok.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("tok")).alias("toks")
-    )
-    bc = F.broadcast if tok_stats["nd"] <= _BCAST_DOCS_MAX else (lambda df: df)
-    arr_a = arrs.select(F.col("doc_id").alias("doc_a"),
+    bc = F.broadcast if doc_stats["nd"] <= _BCAST_DOCS_MAX else (lambda df: df)
+    arr_a = docs.select(F.col("doc_id").alias("doc_a"),
                         F.col("toks").alias("toks_a"))
-    arr_b = arrs.select(F.col("doc_id").alias("doc_b"),
+    arr_b = docs.select(F.col("doc_id").alias("doc_b"),
                         F.col("toks").alias("toks_b"))
     inter = (
         cands.join(bc(arr_a), "doc_a")

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from data_migration_etl_scripts_spark import functions as ef
+from data_migration_etl_scripts_spark.catalog import _listed, read_parquet
 from data_migration_etl_scripts_spark.localdata import local_df
 from data_migration_etl_scripts_spark.functions.contact import clean_contact_sql
 from data_migration_etl_scripts_spark.functions.numeric import (
@@ -60,15 +61,19 @@ _ORACLES: dict[str, str] = {}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Memoized table reader. A warm ``spark.read.parquet`` costs
-    ~85 ms of driver time (path resolution + file listing + footer
-    schema) and ``_normalize_ntz`` adds a schema fetch; the bench's
-    181 queries call ``_t`` ~350 times, so re-reading per call puts
-    ~40 s of pure plan-build overhead on the board (guide §1/§7.3:
-    driver-side planning is real wall time). Memoizing the ANALYZED
-    DataFrame per (sf_dir, table) reuses the logical plan only —
-    every action still scans the parquet files; nothing is cached or
-    persisted (bench repeats clear this with the rest of
+    """Memoized table reader. The read goes through
+    ``catalog.read_parquet``, the reader ``Catalog.read`` uses: the
+    schema comes from the first file's footer on the driver, so no
+    read starts a Spark job. A warm read with ``_normalize_ntz``'s
+    schema fetch costs ~12 ms of driver time for a Spark-written
+    table and ~20 ms for a single pyarrow-written file, against
+    57–78 ms through ``spark.read.parquet`` and its schema-inference
+    job (4-vCPU box). The bench's 181 queries call ``_t`` ~350 times,
+    so memoizing the ANALYZED DataFrame per (sf_dir, table) still
+    keeps that off all but the first call (guide §1/§7.3:
+    driver-side planning is real wall time). It reuses the logical
+    plan only — every action still scans the parquet files; nothing
+    is cached or persisted (bench repeats clear this with the rest of
     stage_cache)."""
     from data_migration_etl_scripts_spark import stage_cache
 
@@ -88,11 +93,11 @@ def _t_build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         except Exception:
             pass  # conf may be static in some deployments; session.py sets it too
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         return _normalize_ntz(df)
-    return _normalize_ntz(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _normalize_ntz(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
 
 
 def _tspread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -105,15 +110,18 @@ def _tspread(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     every CPU-heavy expression chain above it (tokenize + md5
     explodes, DECIMAL aggregates over 600k rows) runs serially while
     31 cores idle. Below ``SPARK_GRAFT_SPREAD_MAX_BYTES`` (default
-    256 MiB) the relation is hash-repartitioned on its leading
+    256 MiB) such a relation is hash-repartitioned on its leading
     key column to the session's default parallelism: deterministic
     (no round-robin sort-before-repartition, retry-safe per guide
     §2.5), high-cardinality keys spread evenly, and the exchange
     itself carries only the small table once.
 
-    Above the ceiling this is a NO-OP: at deployment scale the scan
-    already yields hundreds of splits and an extra exchange would be
-    pure cost — the gate self-disables, it is not a local[32] tune.
+    The spread is a NO-OP where the scan already fans out: above the
+    byte ceiling (at deployment scale the scan yields hundreds of
+    splits), and for a table of at least ``defaultParallelism`` data
+    files (a Spark-written directory, one scan task per file), counted
+    on the driver without a job. An extra exchange there would be pure
+    cost — the gate self-disables, it is not a local[32] tune.
     ``SPARK_GRAFT_SPREAD_MIN_BYTES`` (default 256 KiB) keeps
     broadcast-sized lookups (nation, region, supplier) out."""
     from data_migration_etl_scripts_spark import stage_cache
@@ -133,17 +141,17 @@ def _tspread_build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
-            size = sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _dirs, fs in os.walk(path) for f in fs
-            )
+            files = [os.path.join(r, f) for r, _dirs, fs in os.walk(path) for f in fs]
         else:
-            size = os.path.getsize(path)
+            files = [path]
+        size = sum(os.path.getsize(f) for f in files)
     except OSError:
         return df
-    if not (lo <= size <= hi):
+    n_parallel = spark.sparkContext.defaultParallelism
+    n_data = sum(_listed(os.path.basename(f)) for f in files)
+    if not (lo <= size <= hi) or n_data >= n_parallel:
         return df
-    return df.repartition(spark.sparkContext.defaultParallelism, df.columns[0])
+    return df.repartition(n_parallel, df.columns[0])
 
 
 def _normalize_ntz(df: DataFrame) -> DataFrame:
@@ -2479,8 +2487,10 @@ def ppjoin_exact_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shrunk shingle universe. ceil(t*n) runs as exact rational
     integer arithmetic — a DOUBLE ceil is a cross-engine trap
     (0.7*10 = 7.000000000000001 -> ceil 8 vs DuckDB's exact DECIMAL
-    7.0 -> ceil 7)."""
-    docs = _t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
+    7.0 -> ceil 7). The read is spread: the tokenize + shingle
+    explode under the per-doc checkpoint is the CPU-heavy part of the
+    build, and on a single-file table it would run as one task."""
+    docs = _tspread(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     return dd.ppjoin_pairs(docs, "doc_id", "text", threshold=0.6, shingle_n=3)
 
 

@@ -487,8 +487,10 @@ def test_ppjoin_broadcast_gate(spark, monkeypatch, warn_candidates):
     """The token-array attach carries a broadcast hint only while the
     observed doc count is within ``_BCAST_DOCS_MAX``, with and without
     the pre-flight estimate, and the pair set is exact either way. The
-    hint is checked in the optimized logical plan: at toy scale AQE
-    broadcasts the attach whether or not it is hinted."""
+    count is exact (the rows of the per-doc checkpoint, 60 here), so
+    caps of 70 and 50 fall on either side of it. The hint is checked
+    in the optimized logical plan: at toy scale AQE broadcasts the
+    attach whether or not it is hinted."""
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{(i * 7 + j) % 40}" for j in range(12)))
          for i in range(60)],
@@ -512,3 +514,68 @@ def test_ppjoin_broadcast_gate(spark, monkeypatch, warn_candidates):
         assert ("strategy=broadcast" in plan) is hinted, (cap, plan)
         got = sorted((r.doc_a, r.doc_b, r.n_inter) for r in out.collect())
         assert got == want, cap
+
+
+def _ppjoin_bruteforce(rows, t):
+    """All-pairs exact Jaccard over each doc id's token set: rows of one
+    id pool their tokens, null ids and token-less docs never pair."""
+    import itertools
+
+    from data_migration_etl_scripts_spark.operators import textprep as tp
+
+    sets: dict[int, set] = {}
+    for doc_id, text in rows:
+        if doc_id is not None and text is not None:
+            sets.setdefault(doc_id, set()).update(tp.tokens_list(text))
+    want = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        union = len(sets[a] | sets[b])
+        if union and round(inter / union, 6) >= t:
+            want[(a, b)] = (inter, round(inter / union, 6))
+    return want
+
+
+def test_ppjoin_edge_cases_match_bruteforce(spark):
+    """Null doc ids, empty and null texts, duplicate doc rows (equal and
+    differing), and single-token docs: the pair set equals the
+    brute-force reference at several thresholds."""
+    rows = [
+        (1, "alpha beta gamma delta"),
+        (2, "alpha beta gamma delta"),
+        (2, "alpha beta gamma delta"),  # duplicate row
+        (3, "alpha beta gamma"),
+        (4, "solo"),
+        (5, "solo"),
+        (6, "solo other"),
+        (7, ""),
+        (8, None),
+        (9, "   "),
+        (None, "alpha beta gamma delta"),
+        (None, "solo"),
+        (10, "alpha beta"),
+        (10, "gamma delta"),  # same id, second row: tokens pool
+        (11, "epsilon"),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    for t in (0.5, 0.7, 1.0):
+        got = {
+            (r.doc_a, r.doc_b): (r.n_inter, r.jaccard)
+            for r in dd.ppjoin_pairs(df, "doc_id", "text", threshold=t).collect()
+        }
+        assert got == _ppjoin_bruteforce(rows, t), t
+
+
+def test_ppjoin_build_job_budget(spark, jobs_started):
+    """Building ppjoin over the sf0.01 documents (3-gram shingles,
+    t=0.6, pre-flight on) starts 8 Spark jobs at local[4]: the
+    per-doc aggregate's checkpoint and the pre-flight estimate. An
+    eager token checkpoint followed by a lazy prefix checkpoint (whose
+    shuffle stages still ran under AQE) started 10 here, 11 in the
+    query with the documents schema-inference job."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet").where(
+        F.col("text").isNotNull()
+    )
+    assert jobs_started(
+        lambda: dd.ppjoin_pairs(docs, "doc_id", "text", threshold=0.6, shingle_n=3)
+    ) == 8

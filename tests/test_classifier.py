@@ -9,6 +9,8 @@ text-quality heuristics."""
 
 from __future__ import annotations
 
+import pytest
+
 from data_migration_etl_scripts_spark.operators import classifier as clf
 
 GOOD = [
@@ -173,3 +175,28 @@ def test_duplicate_label_rows_fall_back_to_distributed(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_LOGREG_DRIVER_ROWS", "0")
     w_spark = clf.train_logreg(feats, labels, rounds=3, lr=0.5)
     assert w_guarded == w_spark
+
+
+@pytest.mark.parametrize("path", ["driver", "distributed"])
+def test_training_job_budget(spark, monkeypatch, jobs_started, path):
+    """Training starts no ``labels.count()`` job of its own: the driver
+    path takes the label count from its collect of the labels, and the
+    distributed path from the labels' observed checkpoint. Pinned at
+    local[4] over a derived (non-local) label relation, two rounds;
+    with a separate ``labels.count()`` these were 6 (driver) and 19
+    (distributed)."""
+    from pyspark.sql import functions as F
+
+    from data_migration_etl_scripts_spark.operators import textprep as tp
+
+    docs, _ = _docs(spark, [(t, 1) for t in GOOD] + [(t, 0) for t in BAD])
+    labels = docs.select(
+        "doc_id",
+        F.arrays_overlap(tp.tokens("text"), F.array(F.lit("data"), F.lit("model")))
+        .cast("int").alias("y"),
+    )
+    feats = clf.hashed_features(docs, "doc_id", "text", n_buckets=64)
+    monkeypatch.setenv("SPARK_GRAFT_LOGREG_DRIVER_ROWS",
+                       "1000000" if path == "driver" else "0")
+    n = jobs_started(lambda: clf.train_logreg(feats, labels, rounds=2))
+    assert n == {"driver": 4, "distributed": 17}[path]

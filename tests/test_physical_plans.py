@@ -374,3 +374,20 @@ def test_cms_sketch_partial_aggregates_mapside(spark):
     est = cm.cms_estimate(toks.distinct(), sk, "tok")
     pe = est._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in pe
+
+
+def test_spread_gate_on_both_sides_of_the_file_count(spark, tmp_path, monkeypatch):
+    """``_tspread`` hash-repartitions a single-file table (one scan
+    task) and leaves a table of at least ``defaultParallelism`` data
+    files (one scan task each) as it is; the rows are the same either
+    way. The byte floor is lowered so both small tables are in range."""
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_MIN_BYTES", "1")
+    n_parallel = spark.sparkContext.defaultParallelism
+    rows = spark.range(200).select("id", (F.col("id") % 7).alias("v"))
+    rows.coalesce(1).write.parquet(str(tmp_path / "one.parquet"))
+    rows.repartition(n_parallel).write.parquet(str(tmp_path / "many.parquet"))
+    one = q._tspread(spark, str(tmp_path), "one")
+    many = q._tspread(spark, str(tmp_path), "many")
+    assert "hashpartitioning(id" in plan(one)
+    assert "Exchange" not in plan(many)
+    assert sorted(one.collect()) == sorted(many.collect()) == sorted(rows.collect())
