@@ -1122,8 +1122,7 @@ def aac_encode_sbr(frames: int = 2, rate_idx: int = 8,
     generation -> envelope-adjust -> synthesis chain; with the silent
     core the output is pure adjusted noise, deterministic through the
     seam noise table. Needs the SBR table seam on BOTH sides (the
-    huffman books code the flat runs' zero deltas), the CABAC-style
-    injected-tables discipline."""
+    huffman books code the flat runs' zero deltas)."""
     from data_migration_etl_scripts_spark.operators import sbr as sb
 
     h = {"amp_res": 1, "start_freq": 0, "stop_freq": 0,

@@ -105,17 +105,6 @@ are never reproduced from memory):
     and ``encode_video_skip`` emits an IDR + all-skip P pictures,
     the TABLE-FREE multi-frame path.
 
-What is NEW in r10 — CABAC entropy coding (spec clause 9.3,
-``operators/h264_cabac.py``): PPS entropy_coding_mode_flag = 1
-decodes through the arithmetic engine over the SAME reconstruction
-code (the ``ent`` entropy-source abstraction below), covering the
-full I/P syntax surface. The rangeTabLPS / transIdxLPS / context-
-init tables are the Annex-B seam (``load_cabac_tables`` /
-``$SPARK_GRAFT_CABAC_TABLES``); the engine-encoder operating point
-is :func:`transcode_to_cabac`, which re-serializes any engine CAVLC
-stream's syntax through the arithmetic coder so decode(transcode(x))
-is picture-exact with ANY injected tables.
-
 What is NEW in r10 (second block) — B slices and explicit weighted
 prediction: POC derivation (8.2.1 type-0 lsb/msb wrap), POC-ordered
 RefPicList0/1 construction with the identical-list swap rule, all
@@ -140,16 +129,11 @@ field), and IMPLICIT weighted bi-prediction (weighted_bipred_idc=2,
 8.4.2.3.1 — per-(ref0, ref1) POC-distance weights at logWD 5, zero
 offsets, uni partitions unweighted).
 
-NEW in r11 (second block) — CABAC-coded B slices: the Table 9-37/9-38
-bin trees, the B skip offset, per-list ref/mvd context grids, and B
-reuse of the P init columns (no new seam data); decode and the
-CAVLC->CABAC transcoder both cover B, pinned by hand-derived context
-walks in tests/test_h264_cabac_conformance.py plus the full
-transcode matrix.
-
 NOT in scope (raise namefully): Intra_8x8 prediction, ref-list
 modification / adaptive marking, interlace, high-profile
 transform/scaling-list tools (8x8 transform, QP scaling matrices).
+CABAC: refused — a PPS with entropy_coding_mode_flag = 1 parses, and
+decoding any of its pictures raises NotImplementedError.
 """
 
 from __future__ import annotations
@@ -173,7 +157,6 @@ __all__ = [
     "encode_quantized_yuv",
     "encode_quantized",
     "load_cavlc_tables",
-    "transcode_to_cabac",
 ]
 
 _TABLES_ENV = "SPARK_GRAFT_CAVLC_TABLES"
@@ -704,7 +687,7 @@ def parse_pps(rbsp: bytes, sps: dict | None = None) -> dict:
     r = _R(rbsp)
     pps_id = r.ue()
     sps_id = r.ue()
-    entropy = r.u(1)   # 1 = CABAC (r10), 0 = CAVLC
+    entropy = r.u(1)   # 1 = CABAC (refused at decode), 0 = CAVLC
     bottom_field = r.u(1)
     if r.ue() != 0:
         raise NotImplementedError("slice groups (FMO)")
@@ -2110,9 +2093,9 @@ def _parse_slice_header(r: _R, sps: dict, pps: dict, typ: int,
     is_b = st == 1
     r.ue()  # pps id
     frame_num = r.u(sps["log2_max_frame_num"])
-    idr_pic_id = poc_lsb = None
+    poc_lsb = None
     if typ == 5:
-        idr_pic_id = r.ue()
+        r.ue()  # idr_pic_id
     if sps["poc_type"] == 0:
         poc_lsb = r.u(sps["poc_lsb_bits"])
         if pps["bottom_field"]:
@@ -2122,7 +2105,6 @@ def _parse_slice_header(r: _R, sps: dict, pps: dict, typ: int,
         direct_spatial = r.u(1)
     num_ref = pps["num_ref_l0"]
     num_ref1 = pps["num_ref_l1"]
-    override = None
     weights = None
     mod_l0 = mod_l1 = None
     mmco = None
@@ -2131,9 +2113,6 @@ def _parse_slice_header(r: _R, sps: dict, pps: dict, typ: int,
             num_ref = r.ue() + 1
             if is_b:
                 num_ref1 = r.ue() + 1
-                override = (num_ref, num_ref1)
-            else:
-                override = num_ref
         if r.u(1):  # ref_pic_list_modification_flag_l0
             mod_l0 = _parse_ref_mod(r)
         if is_b and r.u(1):  # ref_pic_list_modification_flag_l1
@@ -2149,11 +2128,6 @@ def _parse_slice_header(r: _R, sps: dict, pps: dict, typ: int,
         # dec_ref_pic_marking for a non-IDR reference slice
         if r.u(1):  # adaptive_ref_pic_marking_mode_flag
             mmco = _parse_mmco(r)
-    init_idc = 0
-    if pps.get("entropy") and st != 2:
-        init_idc = r.ue()
-        if init_idc > 2:
-            raise ValueError(f"cabac_init_idc {init_idc} out of range")
     qp = pps["init_qp"] + r.se()
     idc, off_a, off_b = 0, 0, 0
     if pps["deblock_ctl"]:
@@ -2166,16 +2140,10 @@ def _parse_slice_header(r: _R, sps: dict, pps: dict, typ: int,
             "is_b": is_b, "num_ref1": num_ref1, "weights": weights,
             "direct_spatial": direct_spatial,
             "implicit_wp": is_b and pps["weighted_bipred"] == 2,
-            "num_ref": num_ref, "cabac_init_idc": init_idc,
-            # raw fields retained so the CAVLC->CABAC transcoder can
-            # re-emit an equivalent header
-            "slice_type": slice_type, "frame_num": frame_num,
-            "idr_pic_id": idr_pic_id, "poc_lsb": poc_lsb,
-            "num_ref_override": override, "typ": typ,
-            "ref_idc": ref_idc, "idr_bits": idr_bits,
-            "ref_mod_l0": mod_l0, "ref_mod_l1": mod_l1,
-            "mmco": mmco,
-            "qp_delta_hdr": qp - pps["init_qp"]}
+            "num_ref": num_ref, "frame_num": frame_num,
+            "poc_lsb": poc_lsb, "ref_idc": ref_idc,
+            "idr_bits": idr_bits, "ref_mod_l0": mod_l0,
+            "ref_mod_l1": mod_l1, "mmco": mmco}
 
 
 # ------------------------------------------------- motion compensation
@@ -2309,17 +2277,11 @@ def _interp_chroma(arr, cx0: int, cy0: int, bw: int, bh: int,
     return out.tolist()
 
 
-# --------------------------------------------------- entropy sources
+# ---------------------------------------------------- entropy source
 #
 # decode_mb / decode_inter_mb / decode_chroma fetch every syntax
-# element through an ``ent`` object, so the SAME reconstruction code
-# serves CAVLC (Exp-Golomb + the r8 CAVLC block decoder) and CABAC
-# (r10, operators/h264_cabac.py). ``ent.block`` kinds map to CABAC
-# ctxBlockCat: "ldc"=0 (Intra16 luma DC), "lac"=1 (Intra16 AC),
-# "l4"=2 (luma 4x4), "cdc"=3 (chroma DC), "cac"=4 (chroma AC).
-
-_BLOCK_CAT = {"ldc": 0, "lac": 1, "l4": 2, "cdc": 3, "cac": 4,
-              "l8": 5}
+# element through an ``ent`` object: CAVLC, i.e. Exp-Golomb plus the
+# r8 CAVLC block decoder (CABAC streams are refused up front).
 
 
 class _EntCavlc:
@@ -2381,211 +2343,14 @@ class _EntCavlc:
         cr8 = [[self.r.u(8) for _ in range(8)] for _ in range(8)]
         return y16, cb8, cr8
 
-    def finish_mb(self, mbx, mby) -> None:
-        pass
-
-
-class _EntCapture:
-    """Recording proxy over :class:`_EntCavlc`: every syntax element
-    (with its position args) is appended to a per-MB record, giving
-    the CAVLC->CABAC transcoder a complete replay script without
-    duplicating any reconstruction logic."""
-
-    def __init__(self, inner) -> None:
-        self.inner = inner
-        self.mbs: list = []
-        self.cur = None
-
-    def mb_type(self, mbx, mby, mode) -> int:
-        v = self.inner.mb_type(mbx, mby, mode)
-        self.cur = {"t": v, "mode": mode, "i4": [], "refs": [],
-                    "mvds": [], "subs": [], "blocks": [],
-                    "cbp": None, "qpd": None, "cmode": None,
-                    "ipcm": None}
-        self.mbs.append(self.cur)
-        return v
-
-    def sub_mb_type(self) -> int:
-        v = self.inner.sub_mb_type()
-        self.cur["subs"].append(v)
-        return v
-
-    def ref_idx(self, nref, mbx, mby, px, py, pw, ph,
-                lst: int = 0) -> int:
-        v = self.inner.ref_idx(nref, mbx, mby, px, py, pw, ph, lst)
-        self.cur["refs"].append((nref, px, py, pw, ph, v, lst))
-        return v
-
-    def mvd(self, mbx, mby, px, py, pw, ph, lst: int = 0):
-        v = self.inner.mvd(mbx, mby, px, py, pw, ph, lst)
-        self.cur["mvds"].append((px, py, pw, ph, v, lst))
-        return v
-
-    def t8_flag(self, mbx, mby) -> int:
-        v = self.inner.t8_flag(mbx, mby)
-        self.cur["t8"] = v
-        return v
-
-    def i4_mode(self):
-        v = self.inner.i4_mode()
-        self.cur["i4"].append(v)
-        return v
-
-    def chroma_mode(self, mbx, mby) -> int:
-        v = self.inner.chroma_mode(mbx, mby)
-        self.cur["cmode"] = v
-        return v
-
-    def cbp(self, mbx, mby, intra) -> int:
-        v = self.inner.cbp(mbx, mby, intra)
-        self.cur["cbp"] = v
-        return v
-
-    def qp_delta(self) -> int:
-        v = self.inner.qp_delta()
-        self.cur["qpd"] = v
-        return v
-
-    def block(self, kind, nc, n, pos):
-        v = self.inner.block(kind, nc, n, pos)
-        self.cur["blocks"].append((kind, pos, v))
-        return v
-
-    def ipcm_samples(self):
-        v = self.inner.ipcm_samples()
-        self.cur["ipcm"] = v
-        return v
-
-    def finish_mb(self, mbx, mby) -> None:
-        pass
-
-
-class _EntCabac:
-    """CABAC entropy source (r10): drives
-    :class:`h264_cabac.CabacSyntax` and tracks the per-MB fields the
-    neighbor model needs. The byte-exact engine<->reader sync at
-    terminate bins (module docstring of h264_cabac) is what lets
-    ``ipcm_samples`` read aligned raw bytes from the same reader."""
-
-    def __init__(self, r: _R, dec, syn) -> None:
-        self.r = r
-        self.dec = dec
-        self.syn = syn
-        self.cur = None     # per-MB scratch for the model update
-        self.is_b = False   # current MB parses with the B trees
-
-    def _start(self, mbx, mby):
-        self.cur = {"mb_type": None, "cbp": 0, "cmode": 0,
-                    "ldc": 0, "cdc": [0, 0], "ipcm": False,
-                    "bdirect": False, "t8": 0}
-
-    def mb_type(self, mbx, mby, mode) -> int:
-        self._start(mbx, mby)
-        self.syn.start_mb(mbx, mby)
-        self.is_b = mode == "b"
-        if mode == "b":
-            v = self.syn.mb_type_b(mbx, mby)
-            self.syn.cur_intra = v >= 23
-            iv = v - 23 if v >= 23 else -1
-            self.cur["bdirect"] = v == 0
-        elif mode == "p":
-            v = self.syn.mb_type_p()
-            self.syn.cur_intra = v >= 5
-            iv = v - 5 if v >= 5 else -1
-        else:
-            v = self.syn.mb_type_i(mbx, mby)
-            self.syn.cur_intra = True
-            iv = v
-        self.cur["mb_type"] = iv      # intra-space value or -1
-        self.cur["ipcm"] = iv == 25
-        if 1 <= iv <= 24:             # Intra_16x16 carries its cbp
-            rest = (iv - 1) // 4
-            self.cur["cbp"] = ((rest % 3) << 4) | (15 if rest >= 3
-                                                   else 0)
-        return v
-
-    def sub_mb_type(self) -> int:
-        if self.is_b:
-            return self.syn.sub_mb_type_b()
-        return self.syn.sub_mb_type()
-
-    def ref_idx(self, nref, mbx, mby, px, py, pw, ph,
-                lst: int = 0) -> int:
-        if nref <= 1:   # ref_idx absent; still mark the grid
-            self.syn.m.note_ref(mbx, mby, px, py, pw, ph, 0, lst)
-            return 0
-        return self.syn.ref_idx(mbx, mby, px, py, pw, ph, lst=lst)
-
-    def mvd(self, mbx, mby, px, py, pw, ph, lst: int = 0):
-        return self.syn.mvd_pair(mbx, mby, px, py, pw, ph, lst=lst)
-
-    def t8_flag(self, mbx, mby) -> int:
-        v = self.syn.transform8_flag(mbx, mby)
-        self.cur["t8"] = v
-        return v
-
-    def i4_mode(self):
-        return self.syn.i4_mode()
-
-    def chroma_mode(self, mbx, mby) -> int:
-        cm = self.syn.intra_chroma_mode(mbx, mby)
-        self.cur["cmode"] = cm
-        return cm
-
-    def cbp(self, mbx, mby, intra: bool) -> int:
-        cbp = self.syn.cbp(mbx, mby)
-        if (cbp >> 4) == 3:
-            raise ValueError("cbp chroma component must be 0..2")
-        self.cur["cbp"] = cbp
-        return cbp
-
-    def qp_delta(self) -> int:
-        return self.syn.qp_delta()
-
-    def block(self, kind, nc, n, pos):
-        return self.syn.block(_BLOCK_CAT[kind], pos, n, self.cur)
-
-    def ipcm_samples(self):
-        # the mb_type terminate bin flushed the engine: the reader is
-        # exactly at the encoder's post-flush bit, so align + raw
-        # bytes line up; the engine re-initializes afterwards
-        self.r.byte_align()
-        y16 = [[self.r.u(8) for _ in range(16)] for _ in range(16)]
-        cb8 = [[self.r.u(8) for _ in range(8)] for _ in range(8)]
-        cr8 = [[self.r.u(8) for _ in range(8)] for _ in range(8)]
-        self.dec.init_engine()
-        self.syn.m.prev_qpd_nz = False
-        return y16, cb8, cr8
-
-    def finish_mb(self, mbx, mby) -> None:
-        c = self.cur
-        iv = c["mb_type"]
-        if iv < 0:      # inter MB: qp-delta flag reset when absent
-            if not c["cbp"]:
-                self.syn.m.prev_qpd_nz = False
-            self.syn.m.note_mb(mbx, mby, intra=False, inxn=False,
-                               ipcm=False, i16=False, cbp=c["cbp"],
-                               cmode=0, ldc=0, cdc=c["cdc"],
-                               bdirect=c["bdirect"],
-                               t8=bool(c.get("t8")))
-            return
-        i16 = 1 <= iv <= 24
-        if iv == 0 and not c["cbp"]:
-            self.syn.m.prev_qpd_nz = False
-        self.syn.m.note_mb(mbx, mby, intra=True, inxn=iv == 0,
-                           ipcm=c["ipcm"], i16=i16, cbp=c["cbp"],
-                           cmode=c["cmode"], ldc=c["ldc"],
-                           cdc=c["cdc"], t8=bool(c.get("t8")))
-
 
 def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
-                    capture: list | None = None, cur_poc: int = 0):
+                    cur_poc: int = 0):
     """Decode ONE coded picture (its list of (nal_type, ref_idc, rbsp)
     slices) against the reference list ``refs`` (most-recent-first
     numpy plane triples). Returns the reconstructed (possibly
     in-loop-filtered) y/cb/cr ``_Plane``s at the uncropped MB grid.
-    With ``capture`` (CAVLC streams only), each slice appends
-    (header dict, per-MB syntax records) for the CABAC transcoder.
+    CABAC pictures (PPS entropy_coding_mode_flag = 1) are refused.
 
     Multi-slice pictures decode (r9): slices must cover the MB raster
     contiguously in order (no FMO/ASO); intra prediction, CAVLC nC
@@ -2594,6 +2359,10 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
     P_Skip / P_L0_16x16 / 16x8 / 8x16 partitions with median MV
     prediction, quarter-pel luma + eighth-pel chroma MC, multi-ref
     L0 via sliding-window DPB; P_8x8 sub-partitions raise."""
+    if pps.get("entropy"):
+        raise NotImplementedError(
+            "CABAC entropy coding (PPS entropy_coding_mode_flag = 1) "
+            "is not supported")
     wm, hm = sps["width_mbs"], sps["height_mbs"]
     y_plane = _Plane(16 * wm, 16 * hm)
     cb_plane = _Plane(8 * wm, 8 * hm)
@@ -2644,7 +2413,7 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
 
     cur_slice = 0
     r = _R(b"")
-    ent = None      # per-slice entropy source (_EntCavlc / _EntCabac)
+    ent = None      # per-slice entropy source (_EntCavlc)
     qp = 26
     p_weights = None   # per-slice explicit P weighting (r10)
     #: POC per active-L0 index for the CURRENT slice (refs order for
@@ -2735,18 +2504,10 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
         return _dq4_w(c, qp_, i, j, sc4[midx])
 
     def read_scan64(bx, by):
-        """One 8x8 luma block's 64-coefficient scan. CAVLC reads 4
-        interleaved 4x4 blocks (7.4.5.3.2: level8x8[4*k + sub] =
+        """One 8x8 luma block's 64-coefficient scan: 4 interleaved
+        4x4 blocks (7.4.5.3.2: level8x8[4*k + sub] =
         level4x4[sub][k]), each sub-block's total_coeff landing in
-        its own 4x4 nC cell; CABAC reads a single ctxBlockCat-5
-        block."""
-        if use_cabac:
-            scan = ent.block("l8", -2, 64, (bx, by))
-            for sub in range(4):
-                sbx, sby = bx + sub % 2, by + sub // 2
-                luma_nc[sby][sbx] = sum(
-                    1 for k in range(16) if scan[4 * k + sub])
-            return scan
+        its own 4x4 nC cell."""
         scan64 = [0] * 64
         for sub in range(4):
             sbx, sby = bx + sub % 2, by + sub // 2
@@ -3680,15 +3441,6 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
 
     next_mb = 0
     has_inter = False
-    use_cabac = bool(pps.get("entropy"))
-    if use_cabac and capture is not None:
-        raise ValueError("syntax capture is a CAVLC-source feature")
-    cabac_model = None
-    if use_cabac:
-        from data_migration_etl_scripts_spark.operators import (
-            h264_cabac as _cb,
-        )
-        cabac_model = _cb.MbState(wm, hm, mb_avail)
     for slice_id, (typ, ref_idc, rbsp) in enumerate(pic):
         cur_slice = slice_id
         r = _R(rbsp)
@@ -3748,48 +3500,7 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
             cur_l0_pocs = [e[3] if len(e) > 3 else None
                            for e in refs_l0]
         mb = hdr["first_mb"]
-        if use_cabac:
-            # cabac_alignment_one_bit(s), then slice data from the
-            # byte boundary (pad so arithmetic read-ahead never
-            # exhausts the reader at the trailing terminate)
-            while r.pos & 7:
-                if not r.u(1):
-                    raise ValueError(
-                        "cabac_alignment_one_bit must be 1")
-            r = _R(rbsp[r.pos // 8:] + b"\x00\x00")
-            dec = _cb.CabacDecoder(lambda: r.u(1))
-            # cabac_init_idc selects among the same three init
-            # columns for P AND B slices (9.3.1.1); only I uses "I"
-            key = (f"P{hdr['cabac_init_idc']}" if is_p or is_b
-                   else "I")
-            syn = _cb.CabacSyntax(
-                dec, _cb.init_ctx_states(qp, key), cabac_model, True)
-            ent = _EntCabac(r, dec, syn)
-            cabac_model.slice_start()
-            while True:
-                if mb >= wm * hm:
-                    raise ValueError(
-                        "slice data overruns the picture")
-                mbx, mby = mb % wm, mb // wm
-                syn.start_mb(mbx, mby)
-                if ((is_p or is_b)
-                        and syn.mb_skip(mbx, mby, is_b=is_b)):
-                    if is_b:
-                        decode_skip_b(mb)
-                    else:
-                        decode_skip(mb)
-                    cabac_model.note_skip(mbx, mby)
-                else:
-                    decode_mb(mb, is_p, hdr["num_ref"], is_b=is_b)
-                    ent.finish_mb(mbx, mby)
-                    mb_qp_g[mby][mbx] = qp
-                mb += 1
-                if syn.end_of_slice():
-                    break
-            next_mb = mb
-            continue
-        ent = (_EntCapture(_EntCavlc(r)) if capture is not None
-               else _EntCavlc(r))
+        ent = _EntCavlc(r)
         stop = _rbsp_stop(rbsp)
         while True:
             if is_p or is_b:
@@ -3803,8 +3514,6 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
                         decode_skip_b(mb)
                     else:
                         decode_skip(mb)
-                    if capture is not None:
-                        ent.mbs.append(("skip",))
                     mb += 1
                 if r.pos >= stop:
                     break
@@ -3815,8 +3524,6 @@ def _decode_picture(sps: dict, pps: dict, pic, refs, deblock,
             decode_mb(mb, is_p, hdr["num_ref"], is_b=is_b)
             mb_qp_g[mb // wm][mb % wm] = qp
             mb += 1
-        if capture is not None:
-            capture.append((hdr, ent.mbs))
         next_mb = mb
     if next_mb < wm * hm:
         raise ValueError(
@@ -5086,381 +4793,6 @@ def encode_ipcm(px_rows) -> bytes:
     chroma averaged over each 2x2). RGB round-trips within the usual
     color-conversion rounding (the YUV surface round-trips exactly)."""
     return encode_ipcm_yuv(*_rgb_to_420(px_rows))
-
-
-# ----------------------------------------------- CABAC transcode (r10)
-
-def _write_slice_header_bits(w: _W, sps: dict, pps: dict,
-                             hdr: dict) -> None:
-    """Re-emit a parsed slice header (the engine-supported subset)
-    with cabac_init_idc inserted when the PPS is CABAC."""
-    w.ue(hdr["first_mb"])
-    w.ue(hdr["slice_type"])
-    w.ue(0)                      # pps id (engine streams use 0)
-    w.u(hdr["frame_num"], sps["log2_max_frame_num"])
-    if hdr["typ"] == 5:
-        w.ue(hdr["idr_pic_id"])
-    if sps["poc_type"] == 0:
-        w.u(hdr["poc_lsb"] or 0, sps["poc_lsb_bits"])
-    is_b = hdr.get("is_b")
-    if is_b:
-        w.u(1 if hdr["direct_spatial"] else 0, 1)
-    if hdr["is_p"] or is_b:
-        ov = hdr["num_ref_override"]
-        if ov is not None:
-            w.u(1, 1)
-            if is_b:
-                w.ue(ov[0] - 1)
-                w.ue(ov[1] - 1)
-            else:
-                w.ue(ov - 1)
-        else:
-            w.u(0, 1)
-        for key, present in (("ref_mod_l0", True),
-                             ("ref_mod_l1", is_b)):
-            if not present:
-                continue
-            cmds = hdr.get(key)
-            if cmds:
-                w.u(1, 1)        # ref_pic_list_modification_flag
-                for idc, val in cmds:
-                    w.ue(idc)
-                    w.ue(val)
-                w.ue(3)
-            else:
-                w.u(0, 1)
-        if hdr.get("weights"):
-            # re-emit the parsed pred_weight_table with every flag
-            # explicit (bit syntax may differ from the source stream;
-            # the sample semantics are identical)
-            wt = hdr["weights"]
-            w.ue(wt["lwd"])
-            w.ue(wt["cwd"])
-            for lk, ck in ((("l0", "c0"),) if not is_b
-                           else (("l0", "c0"), ("l1", "c1"))):
-                for (lw, lo), ((bw, bo), (rw, ro)) in zip(wt[lk],
-                                                          wt[ck]):
-                    w.u(1, 1)
-                    w.se(lw)
-                    w.se(lo)
-                    w.u(1, 1)
-                    w.se(bw)
-                    w.se(bo)
-                    w.se(rw)
-                    w.se(ro)
-    if hdr["typ"] == 5:
-        a, b = hdr["idr_bits"] or (0, 0)
-        w.u(a, 1)
-        w.u(b, 1)
-    elif hdr["ref_idc"]:
-        cmds = hdr.get("mmco")
-        if cmds:
-            w.u(1, 1)            # adaptive_ref_pic_marking
-            for cmd in cmds:
-                for v in cmd:    # op + its 1-2 arguments
-                    w.ue(v)
-            w.ue(0)
-        else:
-            w.u(0, 1)
-    if pps.get("entropy") and (hdr["is_p"] or is_b):
-        w.ue(0)                  # cabac_init_idc
-    w.se(hdr["qp_delta_hdr"])
-    if pps["deblock_ctl"]:
-        w.ue(hdr["idc"])
-        if hdr["idc"] != 1:
-            w.se(hdr["off_a"] // 2)
-            w.se(hdr["off_b"] // 2)
-
-
-def _write_cabac_slice_data(w: _W, records: list, hdr: dict,
-                            model, wm: int, mark=None) -> None:
-    """Serialize captured per-MB syntax records as CABAC slice data
-    (cabac_alignment_one_bit, then the arithmetic payload), replaying
-    the exact element order the decoder walks. Shares the ctxIdx
-    derivations with the decode path through h264_cabac.CabacSyntax +
-    the MbState model, so decode(transcode(x)) reconstructs the same
-    picture by construction."""
-    from data_migration_etl_scripts_spark.operators import (
-        h264_cabac as _cb,
-    )
-
-    while w.n & 7:
-        w.u(1, 1)                # cabac_alignment_one_bit
-    bits: list[int] = []
-    enc = _cb.CabacEncoder(bits.append)
-    is_p = hdr["is_p"]
-    is_b = hdr.get("is_b")
-    key = (f"P{hdr['cabac_init_idc']}" if is_p or is_b else "I")
-    syn = _cb.CabacSyntax(enc, _cb.init_ctx_states(hdr["qp"], key),
-                          model, False)
-    model.slice_start()
-    mb = hdr["first_mb"]
-    for i, rec in enumerate(records):
-        mbx, mby = mb % wm, mb // wm
-        last = i == len(records) - 1
-        if mark is not None:
-            mark(mb)
-        syn.start_mb(mbx, mby)
-        if rec == ("skip",):
-            syn.mb_skip(mbx, mby, 1, is_b=bool(is_b))
-            model.note_skip(mbx, mby)
-            syn.end_of_slice(1 if last else 0)
-            mb += 1
-            continue
-        if is_p or is_b:
-            syn.mb_skip(mbx, mby, 0, is_b=bool(is_b))
-        t = rec["t"]
-        if is_p and t == 4:
-            # P_8x8ref0 has no CABAC binarization: recode as P_8x8
-            # with explicit zero refs (bit syntax differs, picture
-            # identical)
-            t = 3
-        if is_b:
-            iv = t - 23 if t >= 23 else -1
-        elif is_p:
-            iv = t - 5 if t >= 5 else -1
-        else:
-            iv = t
-        if is_b:
-            syn.mb_type_b(mbx, mby, t)
-        elif is_p:
-            syn.mb_type_p(t)
-        else:
-            syn.mb_type_i(mbx, mby, t)
-        syn.cur_intra = iv >= 0
-        cur = {"ldc": 0, "cdc": [0, 0]}
-        if iv == 25:             # I_PCM: mb_type flushed the engine
-            while len(bits) & 7:
-                bits.append(0)   # pcm_alignment_zero_bit
-            y16, cb8, cr8 = rec["ipcm"]
-            for rows, n in ((y16, 16), (cb8, 8), (cr8, 8)):
-                for row in rows:
-                    for v in row:
-                        for k in range(7, -1, -1):
-                            bits.append((v >> k) & 1)
-            enc.init_engine()
-            model.note_mb(mbx, mby, intra=True, inxn=False,
-                          ipcm=True, i16=False, cbp=0, cmode=0,
-                          ldc=0, cdc=[0, 0])
-            syn.end_of_slice(1 if last else 0)
-            mb += 1
-            continue
-        t8_mb = bool(rec.get("t8"))
-        blocks = rec["blocks"]
-        wcbp = rec["cbp"]
-        if t8_mb:
-            # reassemble each coded 8x8's four interleaved CAVLC
-            # sub-blocks (7.4.5.3.2) into one cat-5 scan; an 8x8
-            # that decoded ALL-ZERO has no CABAC form (cat 5 carries
-            # no coded_block_flag) so its cbp bit is cleared — the
-            # picture is identical, but a nonzero qp_delta whose
-            # carrier vanishes entirely cannot be preserved
-            groups, lgroup, rest = [], [], []
-            for kind, pos, scan in rec["blocks"]:
-                if kind == "l4":
-                    lgroup.append((pos, scan))
-                    if len(lgroup) == 4:
-                        s64 = [0] * 64
-                        for sub, (_p, sc) in enumerate(lgroup):
-                            for k in range(16):
-                                s64[4 * k + sub] = sc[k]
-                        groups.append((lgroup[0][0], s64))
-                        lgroup = []
-                else:
-                    rest.append((kind, pos, scan))
-            coded_b8 = [b for b in range(4)
-                        if (wcbp or 0) & (1 << b)]
-            keep_luma = 0
-            blocks = []
-            for b8, (gpos, s64) in zip(coded_b8, groups):
-                if any(s64):
-                    keep_luma |= 1 << b8
-                    blocks.append(("l8", gpos, s64))
-            blocks += rest
-            wcbp = keep_luma | ((wcbp or 0) & 0x30)
-            if not wcbp and rec["cbp"] and rec.get("qpd"):
-                raise ValueError(
-                    "cannot transcode: all-zero 8x8 residuals with "
-                    "a nonzero mb_qp_delta have no CABAC carrier")
-        if iv == 0:              # Intra_4x4 / Intra_8x8
-            if rec.get("t8") is not None:
-                syn.transform8_flag(mbx, mby, rec["t8"])
-            for fl, rem in rec["i4"]:
-                syn.i4_mode((fl, rem if rem is not None else 0))
-            syn.intra_chroma_mode(mbx, mby, rec["cmode"])
-            syn.cbp(mbx, mby, wcbp)
-            if wcbp:
-                syn.qp_delta(rec["qpd"])
-        elif iv > 0:             # Intra_16x16 (cbp rides mb_type)
-            syn.intra_chroma_mode(mbx, mby, rec["cmode"])
-            syn.qp_delta(rec["qpd"])
-        else:                    # inter
-            for s in rec["subs"]:
-                if is_b:
-                    syn.sub_mb_type_b(s)
-                else:
-                    syn.sub_mb_type(s)
-            refs = rec["refs"]
-            if rec["t"] == 4 and not refs:
-                refs = [(hdr["num_ref"], 8 * (q % 2), 8 * (q // 2),
-                         8, 8, 0, 0) for q in range(4)]
-            for nref, px, py, pw, ph, val, lst in refs:
-                if nref <= 1:
-                    model.note_ref(mbx, mby, px, py, pw, ph, val,
-                                   lst)
-                else:
-                    syn.ref_idx(mbx, mby, px, py, pw, ph, val,
-                                lst=lst)
-            for px, py, pw, ph, val, lst in rec["mvds"]:
-                syn.mvd_pair(mbx, mby, px, py, pw, ph, val, lst=lst)
-            syn.cbp(mbx, mby, wcbp)
-            # inter transform_size_8x8_flag sits between cbp and
-            # qp_delta and only exists while luma cbp survives
-            if rec.get("t8") is not None and (wcbp or 0) & 15:
-                syn.transform8_flag(mbx, mby, rec["t8"])
-            if wcbp:
-                syn.qp_delta(rec["qpd"])
-        for kind, pos, scan in blocks:
-            syn.block(_BLOCK_CAT[kind], pos, len(scan), cur, scan)
-        if iv >= 0:
-            if (wcbp is None or not wcbp) and iv == 0:
-                model.prev_qpd_nz = False
-            cbp = wcbp or 0
-            if 1 <= iv <= 24:
-                rest = (iv - 1) // 4
-                cbp = ((rest % 3) << 4) | (15 if rest >= 3 else 0)
-            model.note_mb(mbx, mby, intra=True, inxn=iv == 0,
-                          ipcm=False, i16=1 <= iv <= 24, cbp=cbp,
-                          cmode=rec["cmode"] or 0, ldc=cur["ldc"],
-                          cdc=cur["cdc"], t8=t8_mb)
-        else:
-            if not wcbp:
-                model.prev_qpd_nz = False
-            model.note_mb(mbx, mby, intra=False, inxn=False,
-                          ipcm=False, i16=False, cbp=wcbp or 0,
-                          cmode=0, ldc=0, cdc=cur["cdc"],
-                          bdirect=bool(is_b) and rec["t"] == 0,
-                          t8=t8_mb and bool((wcbp or 0) & 15))
-        syn.end_of_slice(1 if last else 0)
-        mb += 1
-    while len(bits) & 7:
-        bits.append(0)           # trailing alignment after the flush
-    for i in range(0, len(bits), 8):
-        v = 0
-        for b in bits[i: i + 8]:
-            v = (v << 1) | b
-        w.u(v, 8)
-
-
-def transcode_to_cabac(data: bytes) -> bytes:
-    """Re-encode a CAVLC Annex-B stream (e.g. any engine encoder's
-    output) as a CABAC stream: the PPS entropy_coding_mode_flag flips
-    to 1, P-slice headers gain cabac_init_idc, and every slice's
-    macroblock syntax is re-serialized through the arithmetic coder —
-    predictions, residuals, and reconstruction are untouched, so
-    ``decode_video_yuv(transcode_to_cabac(x))`` returns exactly the
-    planes of ``decode_video_yuv(x)``. This is the CABAC seam's
-    engine-encoder operating point: it exercises every CABAC syntax
-    element the decoder supports with injected tables."""
-    from data_migration_etl_scripts_spark.operators import (
-        h264_cabac as _cb,
-    )
-
-    sps = pps = None
-    out = bytearray()
-    pics: list[list] = []
-    order: list = []         # emit order: ("nal", bytes) | ("pic", i)
-    for ref, typ, rbsp in nal_units(data):
-        if typ == 7:
-            if sps is None:
-                sps = parse_sps(rbsp)
-            order.append(("nal", _nal(rbsp, ref, typ)))
-        elif typ == 8:
-            if pps is None:
-                pps = parse_pps(rbsp, sps)
-                if pps.get("entropy"):
-                    raise ValueError("stream is already CABAC")
-                rb = bytearray(rbsp)
-                rr = _R(rbsp)
-                rr.ue()
-                rr.ue()
-                rb[rr.pos >> 3] |= 0x80 >> (rr.pos & 7)
-                order.append(("nal", _nal(bytes(rb), ref, typ)))
-            else:
-                order.append(("nal", _nal(rbsp, ref, typ)))
-        elif typ in (1, 5):
-            if _R(rbsp).ue() == 0 or not pics:
-                pics.append([])
-                order.append(("pic", len(pics) - 1))
-            pics[-1].append((typ, ref, rbsp))
-        else:
-            order.append(("nal", _nal(rbsp, ref, typ)))
-    if sps is None or pps is None or not pics:
-        raise ValueError("no SPS+PPS+slice in stream")
-    wm, hm = sps["width_mbs"], sps["height_mbs"]
-    pps_cabac = dict(pps, entropy=1)
-
-    dpb: list = []
-    rendered: dict[int, bytes] = {}
-    poc_state: dict = {}
-    for pi, pic in enumerate(pics):
-        if pic[0][0] == 5:
-            dpb = []
-        capture: list = []
-        hdr0 = _parse_slice_header(_R(pic[0][2]), sps, pps,
-                                   pic[0][0], pic[0][1])
-        poc = _picture_poc(sps, hdr0, pic[0][0] == 5, poc_state)
-        y_p, cb_p, cr_p, mvf, pocf, mvf1, pocf1 = _decode_picture(
-            sps, pps, pic, dpb, deblock="auto", capture=capture,
-            cur_poc=poc)
-        decoded = [[-1] * wm for _ in range(hm)]
-        sl_id = [0]
-
-        def avail(mbx, mby, _d=decoded, _s=sl_id):
-            return _d[mby][mbx] == _s[0]
-
-        model = _cb.MbState(wm, hm, avail)
-        chunk = bytearray()
-        mb0 = 0
-        for si, ((typ, ref, _rbsp), (hdr, records)) in enumerate(
-                zip(pic, capture)):
-            sl_id[0] = si
-            w = _W()
-            hdr = dict(hdr, cabac_init_idc=0)
-            _write_slice_header_bits(w, sps, pps_cabac, hdr)
-
-            def mark(m, _si=si):
-                decoded[m // wm][m % wm] = _si
-
-            _write_cabac_slice_data(w, records, hdr, model, wm,
-                                    mark=mark)
-            mb0 += len(records)
-            chunk += _nal(bytes(w.buf), ref, typ)
-        rendered[pi] = bytes(chunk)
-        if pic[0][1]:
-            entry = (_plane_np(y_p), _plane_np(cb_p),
-                     _plane_np(cr_p), poc, mvf, pocf,
-                     mvf1, pocf1, hdr0["frame_num"], None)
-            if pic[0][0] == 5 and (hdr0.get("idr_bits")
-                                   or (0, 0))[1]:
-                entry = _set_lt(entry, 0)
-            mmco = hdr0.get("mmco")
-            dpb = _apply_marking(
-                dpb, mmco, entry, hdr0["frame_num"],
-                1 << sps["log2_max_frame_num"], sps["max_ref"])
-            if mmco and any(c[0] == 5 for c in mmco):
-                # MMCO-5 re-origin (8.2.5.4.5): the current picture
-                # is inferred to have frame_num 0 and POC 0, and the
-                # POC derivation restarts from it
-                e0 = list(dpb[0])
-                e0[3] = 0
-                e0[8] = 0
-                dpb[0] = tuple(e0)
-                poc_state.clear()
-                poc_state.update({"msb": 0, "lsb": 0, "cnt": 0})
-    for kind, v in order:
-        out += v if kind == "nal" else rendered[v]
-    return bytes(out)
 
 
 # ------------------------------------------------- B-slice encoder (r10)

@@ -1426,25 +1426,19 @@ def synthetic_real_media_rows(
     deterministic pure functions of the arguments, so the cache is
     semantics-free; callers receive a fresh shallow copy."""
     from data_migration_etl_scripts_spark.operators import (
-        h264_cabac as _h264_cabac,
-    )
-
-    from data_migration_etl_scripts_spark.operators import (
         vorbis as _vorbis,
     )
 
     from data_migration_etl_scripts_spark.operators import sbr as _sbr
 
-    # the r10 CABAC / quantized-Vorbis and r11 SBR rows are
+    # the r10 quantized-Vorbis and r11 SBR rows are
     # environment-gated (env table seams), so the gate states are
     # part of the cache key
-    cabac = bool(os.environ.get(_h264_cabac._TABLES_ENV)
-                 and _h264_cabac.seam_available())
     vorb = bool(os.environ.get(_vorbis._TABLES_ENV)
                 and _vorbis.seam_available())
     sbr_on = bool(os.environ.get(_sbr._TABLES_ENV)
                   and _sbr.seam_available())
-    key = (n, include_mpeg, cabac, vorb, sbr_on)
+    key = (n, include_mpeg, vorb, sbr_on)
     hit = _REAL_MEDIA_ROWS_CACHE.get(key)
     if hit is None:
         hit = _synthetic_real_media_rows_build(n, include_mpeg)
@@ -1761,22 +1755,6 @@ def _synthetic_real_media_rows_build(
                      bytearray(encode_video_b_skip(
                          px11, temporal=True, implicit=True,
                          poc_p=8)), "{}"))
-        # r10: a CABAC-entropy H.264 stream (the engine transcoder
-        # re-serializes the quantized picture's syntax through the
-        # clause-9.3 arithmetic coder; operators/h264_cabac.py).
-        # Gated on the CABAC table seam being available via
-        # $SPARK_GRAFT_CABAC_TABLES, because Spark workers re-import
-        # the module and a CABAC payload needs the same tables at
-        # decode time — with the seam empty this row is simply absent
-        # (both the query and its driver-side oracle see the same
-        # gate, so the compare stays consistent either way).
-        from data_migration_etl_scripts_spark.operators import (
-            h264_cabac as _h264_cabac,
-        )
-        from data_migration_etl_scripts_spark.operators.h264 import (
-            transcode_to_cabac,
-        )
-
         # r10: an Ogg-VORBIS stream from the engine silence encoder
         # (operators/vorbis.py — full header-triad/setup parse +
         # silence operating point, zero tables on either side)
@@ -1815,25 +1793,13 @@ def _synthetic_real_media_rows_build(
                          frames=4, config=31, channels=1,
                          frames_per_packet=2, pre_skip=312)),
                      "{}"))
-        if (os.environ.get(_h264_cabac._TABLES_ENV)
-                and _h264_cabac.seam_available()):
-            rows.append((n + 30, "video",
-                         bytearray(transcode_to_cabac(
-                             encode_quantized(px9, qp=12))),
-                         "{}"))
-            # r11: a CABAC-coded B clip (the table-free all-B_Skip
-            # stream transcoded through the arithmetic coder — B
-            # skip flag at ctx 24, B reference lists, end_of_slice)
-            rows.append((n + 35, "video",
-                         bytearray(transcode_to_cabac(
-                             encode_video_b_skip(px11))), "{}"))
         # r12: a HIGH-PROFILE clip — profile-100 SPS, transform_8x8
         # PPS, Intra_8x8 all-DC macroblocks with CAVLC-interleaved
         # 8x8 residuals (operators/h264.py mb_mode='i8'). Env-gated
         # on the CAVLC seam's cbp_intra map (Table 9-4), which the
         # encoder's me(v) reverse lookup AND every worker's decode
-        # both need; same both-sides-gated consistency as the CABAC
-        # rows.
+        # both need — with the seam empty this row is simply absent,
+        # and the query and its driver-side oracle see the same gate.
         from data_migration_etl_scripts_spark.operators import (
             h264 as _h264,
         )

@@ -11,9 +11,8 @@ Layered per the build-vs-seam policy:
   frame duration, stereo flag, frame-count code), codes 0..3
   including the two-byte length form, CBR/VBR rule checks, padding;
   OpusHead/OpusTags parsing with pre-skip.
-- **Range coder** (§4.1): pure structure, the arithmetic twin of the
-  CABAC engine — decoder and encoder implemented as the spec's
-  procedures (32-bit value/range, byte-at-a-time renormalization
+- **Range coder** (§4.1): pure structure — decoder and encoder
+  implemented as the spec's procedures (32-bit value/range, byte-at-a-time renormalization
   with carry propagation on the encode side); reads past the frame
   end return zero bytes per §4.1.2.
 - **CELT silence operating point**: a CELT-only frame whose FIRST

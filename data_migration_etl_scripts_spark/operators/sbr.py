@@ -54,9 +54,9 @@ published spec layout; the engine operating point
 (:func:`aac.aac_encode_sbr` replaying this decoder) keeps both sides
 bit-identical, the QMF pair is pinned against naive evaluations of
 its defining sums, and band-table/grid corners carry hand-computed
-pins — but, as with CABAC before its r11 walk pins, decoding a REAL
-foreign HE-AAC stream additionally needs the genuine tables plus a
-foreign fixture ($SPARK_GRAFT_SBR_FIXTURE harness pattern applies).
+pins — but decoding a REAL foreign HE-AAC stream additionally needs
+the genuine tables plus a foreign fixture ($SPARK_GRAFT_SBR_FIXTURE
+harness pattern applies).
 PS (HE-AAC v2) raises namefully at the extension id.
 """
 

@@ -107,12 +107,15 @@ def subcategories_transform(
     DERIVED by joining SyncCategories(AccountID, Name, OldCategoryID)
     to the freshly-loaded Categories on the composite business key
     (AccountID, Name), then the batch remaps through it. Ungated: the
-    reference only reports unmatched rows.
+    reference only reports unmatched rows. An old id that reaches
+    several CategoryIDs (the categories pipeline appends crosswalk
+    rows) keeps the least, as ``reference_dag._packages_chained``
+    does, so the map does not depend on batch size.
     """
     cat_ids = (
         sync_categories.join(categories, ["AccountID", "Name"], "left")
-        .select("CategoryID", "OldCategoryID")
-        .dropDuplicates(["OldCategoryID"])
+        .groupBy("OldCategoryID")
+        .agg(F.min("CategoryID").alias("CategoryID"))
     )
     out = batch.withColumnsRenamed({"CategoryID": "OldCategoryID"})
     return out.join(F.broadcast(cat_ids), "OldCategoryID", "left")

@@ -1,17 +1,19 @@
 """Board leg with populated table seams (r10 verdict watch-item #3):
-the CABAC and quantized-Vorbis fixture rows are env-gated off the
-default board, so the default selfcheck never decodes them through
-the Spark mapInPandas path. This test runs `multimodal_real_decode`
-in a FRESH subprocess with synthetic CABAC + Vorbis tables injected
-via the env seams BEFORE the JVM starts (local-mode Python workers
-inherit the driver environment at launch, so setting the vars inside
-an existing session would not reach them), and re-verifies every
-row's features driver-side from the same payload bytes — the exact
-protocol of tools/selfcheck.py::_range_multimodal_decode.
+the quantized-Vorbis, HE-AAC SBR/PS and High-profile fixture rows are
+env-gated off the default board, so the default selfcheck never
+decodes them through the Spark mapInPandas path. This test runs
+`multimodal_real_decode` in a FRESH subprocess with synthetic Vorbis,
+SBR/PS and CAVLC tables injected via the env seams BEFORE the JVM
+starts (local-mode Python workers inherit the driver environment at
+launch, so setting the vars inside an existing session would not
+reach them), and re-verifies every row's features driver-side from
+the same payload bytes — the exact protocol of
+tools/selfcheck.py::_range_multimodal_decode.
 
 The equivalent manual command (documented for CI):
 
-    SPARK_GRAFT_CABAC_TABLES=<json> SPARK_GRAFT_VORBIS_TABLES=<json> \
+    SPARK_GRAFT_VORBIS_TABLES=<json> SPARK_GRAFT_SBR_TABLES=<json> \
+        SPARK_GRAFT_CAVLC_TABLES=<path> \
         python tools/selfcheck.py multimodal_real
 """
 
@@ -21,18 +23,16 @@ import json
 import os
 import subprocess
 import sys
-import tempfile
 
 _DRIVER = r"""
 import json, sys
 from pyspark.sql import SparkSession
 
-from data_migration_etl_scripts_spark.operators import h264_cabac, vorbis
+from data_migration_etl_scripts_spark.operators import vorbis
 from data_migration_etl_scripts_spark.operators import sbr as _sbr
 from data_migration_etl_scripts_spark.operators import multimodal as mm
 from data_migration_etl_scripts_spark import queries
 
-assert h264_cabac.seam_available(), "CABAC env seam did not load"
 assert vorbis.seam_available(), "Vorbis env seam did not load"
 assert _sbr.seam_available(), "SBR env seam did not load"
 
@@ -49,7 +49,7 @@ finally:
 fixture = {mid: (mtype, bytes(content))
            for mid, mtype, content, _m in mm.synthetic_real_media_rows(
                24, include_mpeg=True)}
-gated = {24 + 30, 24 + 33, 24 + 35, 24 + 36, 24 + 38, 24 + 40}
+gated = {24 + 33, 24 + 36, 24 + 38, 24 + 40}
 assert gated <= set(fixture), sorted(fixture)
 assert len(rows) == len(fixture), (len(rows), len(fixture))
 seen = set()
@@ -66,16 +66,6 @@ for r in rows:
 assert gated <= seen
 print("BOARD_SEAM_OK", len(rows))
 """
-
-
-def _synthetic_cabac_tables() -> dict:
-    rl = [[max(2, min(240, ((q + 1) * (128 - 2 * s)) // 2 + 2))
-           for q in range(4)] for s in range(64)]
-    tl = [max(0, s - 1 - s // 8) for s in range(64)]
-    init = {k: [[(i * 5) % 16 - 8, 40 + (i * 7) % 48]
-                for i in range(277)]
-            for k in ("I", "P0", "P1", "P2")}
-    return {"range_lps": rl, "trans_lps": tl, "init": init}
 
 
 def _synthetic_sbr_tables() -> dict:
@@ -116,18 +106,16 @@ def _synthetic_sbr_tables() -> dict:
                              0.0, -0.589, -1.0]}
 
 
-def test_board_runs_with_populated_seams():
-    """The 65-row board (59 default + CABAC-I n+30 + quantized-Vorbis
-    n+33 + CABAC-B n+35 + HE-AAC SBR n+36 + High-profile i8 n+38 +
-    HE-AAC v2 PS n+40) decodes end to end through Spark with
-    synthetic seam tables injected via the env vars, and every row's
-    features match the driver-side recompute."""
+def test_board_runs_with_populated_seams(tmp_path):
+    """The 63-row board (59 default + quantized-Vorbis n+33 + HE-AAC
+    SBR n+36 + High-profile i8 n+38 + HE-AAC v2 PS n+40) decodes end
+    to end through Spark with synthetic seam tables injected via the
+    env vars, and every row's features match the driver-side
+    recompute."""
     env = dict(os.environ)
-    env["SPARK_GRAFT_CABAC_TABLES"] = json.dumps(
-        _synthetic_cabac_tables())
     # the CAVLC loader takes a PATH (not inline JSON): stage the
     # synthetic Table 9-4 bijection in a temp file for the workers
-    cavlc_path = os.path.join(tempfile.mkdtemp(), "cavlc.json")
+    cavlc_path = str(tmp_path / "cavlc.json")
     with open(cavlc_path, "w") as fh:
         json.dump({"cbp_intra": [[i, i] for i in range(48)]}, fh)
     env["SPARK_GRAFT_CAVLC_TABLES"] = cavlc_path

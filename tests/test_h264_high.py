@@ -294,11 +294,13 @@ def test_i8_round_trip_bit_exact_and_source_bound():
 
 def test_i8_multi_slice_round_trip():
     _cbp_seam()
-    ys, cbs, crs = _noise_planes(32, 48, seed=9)
-    b, recon = h.encode_quantized_yuv(ys, cbs, crs, qp=12,
-                                      mb_mode="i8", slices=3)
-    _, _, yd, cbd, crd = h.decode_iframe_yuv(b)
-    assert yd == recon[0] and cbd == recon[1] and crd == recon[2]
+    for (w, hgt, seed, qp) in ((32, 48, 9, 12), (48, 48, 7, 20)):
+        ys, cbs, crs = _noise_planes(w, hgt, seed=seed)
+        b, recon = h.encode_quantized_yuv(ys, cbs, crs, qp=qp,
+                                          mb_mode="i8", slices=3)
+        _, _, yd, cbd, crd = h.decode_iframe_yuv(b)
+        assert (yd == recon[0] and cbd == recon[1]
+                and crd == recon[2]), (w, hgt, seed, qp)
 
 
 def test_i8_deblock_round_trip_skips_internal_4px_edges():
@@ -472,192 +474,3 @@ def test_p_slice_8x8_transform_hand_stream():
             if x < 8 and y < 8:
                 want = max(0, min(255, want + ((res[y][x] + 32) >> 6)))
             assert py[y][x] == want, (x, y)
-
-
-# ------------------------------------------------ CABAC 8x8 (cat 5)
-
-from data_migration_etl_scripts_spark.operators import h264_cabac as C
-
-
-@pytest.fixture
-def cabac_seam():
-    saved = {"range_lps": C.CABAC["range_lps"],
-             "trans_lps": C.CABAC["trans_lps"],
-             "init": dict(C.CABAC["init"]),
-             "sig8x8_map": C.CABAC["sig8x8_map"],
-             "last8x8_map": C.CABAC["last8x8_map"]}
-    rl = [[max(2, min(240, ((q + 1) * (128 - 2 * s)) // 2 + 2))
-           for q in range(4)] for s in range(64)]
-    tl = [max(0, s - 1 - s // 8) for s in range(64)]
-    init = {k: [[(i * 5) % 16 - 8, 40 + (i * 7) % 48]
-                for i in range(436)]
-            for k in ("I", "P0", "P1", "P2")}
-    C.load_cabac_tables({"range_lps": rl, "trans_lps": tl,
-                         "init": init,
-                         "sig8x8_map": [i % 15 for i in range(63)],
-                         "last8x8_map": [i % 9 for i in range(63)]})
-    yield
-    C.CABAC["range_lps"] = saved["range_lps"]
-    C.CABAC["trans_lps"] = saved["trans_lps"]
-    C.CABAC["init"].clear()
-    C.CABAC["init"].update(saved["init"])
-    C.CABAC["sig8x8_map"] = saved["sig8x8_map"]
-    C.CABAC["last8x8_map"] = saved["last8x8_map"]
-
-
-def test_i8_cavlc_to_cabac_transcode_picture_exact(cabac_seam):
-    """The High-profile engine clip transcodes to CABAC (flag ctx
-    399+, cat-5 blocks with the seam 9-43 maps) and decodes to the
-    identical picture."""
-    _cbp_seam()
-    ys, cbs, crs = _noise_planes(48, 48, seed=7)
-    b, recon = h.encode_quantized_yuv(ys, cbs, crs, qp=14,
-                                      mb_mode="i8")
-    cb = h.transcode_to_cabac(b)
-    assert h.decode_iframe_yuv(cb) == h.decode_iframe_yuv(b)
-    # multi-slice too (per-slice ctx re-init + alignment)
-    b2, _ = h.encode_quantized_yuv(ys, cbs, crs, qp=20,
-                                   mb_mode="i8", slices=3)
-    cb2 = h.transcode_to_cabac(b2)
-    assert h.decode_iframe_yuv(cb2) == h.decode_iframe_yuv(b2)
-
-
-def test_p_t8_hand_stream_transcodes_to_cabac(cabac_seam):
-    """The inter 8x8-transform hand stream (P_L0_16x16, flag between
-    cbp and qp_delta) transcodes: the CABAC decode must reproduce the
-    CAVLC pictures exactly."""
-    _cbp_seam()
-    h.load_cavlc_tables({
-        "coeff_token": {"0": [[1, 1, 1, 1], [2, 1, 0, 0],
-                              [3, 1, 1, 0]]},
-        "total_zeros": {"1": [[1, 1, 15], [2, 1, 0]]},
-    })
-    px = [[((7 * x + 3 * y) % 256, 128, 128) for x in range(16)]
-          for y in range(16)]
-    base = h.nal_units(h.encode_video_b_skip(px))
-    hdrs = h._write_sps_pps(1, 1, 16, 16, high8x8=True, poc0=True,
-                            max_ref=2)
-    psl = h._W()
-    psl.ue(0)
-    psl.ue(5)
-    psl.ue(0)
-    psl.u(1, 4)
-    psl.u(8, 6)
-    psl.u(0, 1)
-    psl.u(0, 1)
-    psl.u(0, 1)
-    psl.se(0)
-    psl.ue(1)
-    psl.ue(0)
-    psl.ue(0)
-    psl.se(0)
-    psl.se(0)
-    psl.ue(1)       # cbp 1
-    psl.u(1, 1)     # transform_size_8x8_flag
-    psl.se(0)
-    scan64 = [3] + [0] * 63
-    for sub in range(4):
-        h._cavlc_write_block(psl, [scan64[4 * k + sub]
-                                   for k in range(16)], 0, 16)
-    stream = (hdrs + h._nal(base[2][2], 3, 5)
-              + h._nal(psl.trailing(), 2, 1))
-    cab = h.transcode_to_cabac(stream)
-    w1 = h.decode_video_yuv(stream)
-    w2 = h.decode_video_yuv(cab)
-    assert w1 == w2
-
-
-def test_t8_cabac_hand_ctx_walk(cabac_seam):
-    """Hand-derived ctxIdx walk for the High surfaces, asserted on
-    the write side's trace: transform_size_8x8_flag at 399 + the
-    neighbor increments, then one cat-5 block with nonzeros at scan
-    0 (level 2) and 5 (level -1) under the synthetic i%15 / i%9
-    position maps —
-    sig/last: 402+0,417+0 | 403..406 zeros | 407,422(last) ;
-    levels reverse: i=5 m1=0 -> abs ctx 426+1, sign bp; i=0 m1=1 ->
-    426+2 then 426+5+0, sign bp (9.3.3.1.3 increment recurrence)."""
-    model = C.MbState(2, 1, lambda x, y: 0 <= x < 2 and y == 0)
-    bits = []
-    enc = C.CabacEncoder(bits.append)
-    syn = C.CabacSyntax(enc, C.init_ctx_states(26, "I"), model,
-                        False)
-    syn.trace = []
-    syn.start_mb(0, 0)
-    syn.transform8_flag(0, 0, 1)
-    assert syn.trace == [399]       # no neighbors
-    model.note_mb(0, 0, intra=True, inxn=True, ipcm=False,
-                  i16=False, cbp=15, cmode=0, ldc=0, cdc=[0, 0],
-                  t8=True)
-    syn.trace = []
-    syn.start_mb(1, 0)
-    syn.transform8_flag(1, 0, 1)
-    assert syn.trace == [400]       # left neighbor has the flag
-    scan = [0] * 64
-    scan[0] = 2
-    scan[5] = -1
-    syn.trace = []
-    cur = {"ldc": 0, "cdc": [0, 0]}
-    syn.block(5, (4, 0), 64, cur, scan)
-    assert syn.trace == [402, 417, 403, 404, 405, 406, 407, 422,
-                         427, "bp", 428, 431, "bp"]
-    # and the covered 4x4 cbf cells flip for 4x4 neighbors' inference
-    assert all(model.cbf_l[dy][4 + dx] == 1
-               for dy in (0, 1) for dx in (0, 1))
-
-
-def test_t8_cabac_read_side_round_trips_the_walk(cabac_seam):
-    """The decode side consumes the identical walk: encode the two
-    flags + block, terminate, then decode with a fresh reader and
-    compare values AND trace."""
-    def drive(decoding, engine):
-        model = C.MbState(2, 1,
-                          lambda x, y: 0 <= x < 2 and y == 0)
-        syn = C.CabacSyntax(engine, C.init_ctx_states(26, "I"),
-                            model, decoding)
-        syn.trace = []
-        scan = [0] * 64
-        scan[0] = 2
-        scan[5] = -1
-        syn.start_mb(0, 0)
-        f0 = syn.transform8_flag(0, 0, None if decoding else 1)
-        cur = {"ldc": 0, "cdc": [0, 0]}
-        out = syn.block(5, (0, 0), 64, cur,
-                        None if decoding else scan)
-        return f0, out, syn.trace
-
-    sink = []
-    enc = C.CabacEncoder(sink.append)
-    f0w, outw, tw = drive(False, enc)
-    enc.terminate(1)
-    sink.extend([0] * 16)
-    pos = [0]
-
-    def rb():
-        p = pos[0]
-        pos[0] += 1
-        return sink[p] if p < len(sink) else 0
-
-    dec = C.CabacDecoder(rb)
-    f0r, outr, tr = drive(True, dec)
-    assert (f0r, outr) == (f0w, outw)
-    assert tr == tw
-
-
-def test_t8_cabac_seam_raises_are_named(cabac_seam):
-    C.CABAC["sig8x8_map"] = None
-    model = C.MbState(1, 1, lambda x, y: x == 0 and y == 0)
-    bits = []
-    syn = C.CabacSyntax(C.CabacEncoder(bits.append),
-                        C.init_ctx_states(26, "I"), model, False)
-    with pytest.raises(NotImplementedError, match="sig8x8_map"):
-        syn.transform8_flag(0, 0, 1)
-    C.CABAC["sig8x8_map"] = [0] * 63
-    C.CABAC["last8x8_map"] = [0] * 63
-    short = C.CabacSyntax(C.CabacEncoder(bits.append),
-                          [[30, 0]] * 277, model, False)
-    with pytest.raises(NotImplementedError, match="0..435"):
-        short.transform8_flag(0, 0, 1)
-    with pytest.raises(ValueError, match="63 ctxIdxInc"):
-        C.load_cabac_tables({"sig8x8_map": [0] * 62})
-    with pytest.raises(ValueError, match="63 ctxIdxInc"):
-        C.load_cabac_tables({"last8x8_map": [9] * 63})

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -82,6 +83,41 @@ def test_observe_only_in_gates():
         if "Observation(" in line or ".observe(" in line
     ]
     assert not offenders, offenders
+
+
+#: Every ``SPARK_GRAFT_*`` environment knob the package names. A new
+#: option (or a deleted one) must change this tuple on purpose.
+KNOBS = (
+    "SPARK_GRAFT_AAC_TABLES",
+    "SPARK_GRAFT_CAVLC_TABLES",
+    "SPARK_GRAFT_CC_DRIVER_EDGES",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_LOGREG_DRIVER_ROWS",
+    "SPARK_GRAFT_LSF_TABLES",
+    "SPARK_GRAFT_MP3_TABLES",
+    "SPARK_GRAFT_OPUS_TABLES",
+    "SPARK_GRAFT_PAGERANK_BCAST_NODES",
+    "SPARK_GRAFT_PAGERANK_DRIVER_EDGES",
+    "SPARK_GRAFT_PAGERANK_PROBE_MAX_BYTES",
+    "SPARK_GRAFT_SBR_FIXTURE",
+    "SPARK_GRAFT_SBR_TABLES",
+    "SPARK_GRAFT_SPREAD_MAX_BYTES",
+    "SPARK_GRAFT_SPREAD_MIN_BYTES",
+    "SPARK_GRAFT_T4_TABLES",
+    "SPARK_GRAFT_VORBIS_TABLES",
+)
+
+
+def test_knob_inventory_is_pinned():
+    """The package's environment knobs are exactly ``KNOBS``."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "data_migration_etl_scripts_spark"
+    found = {
+        name
+        for path in pkg.rglob("*.py")
+        for name in re.findall(r"SPARK_GRAFT_[A-Z0-9_]+", path.read_text())
+    }
+    assert sorted(found) == list(KNOBS)
 
 
 def test_require_no_nulls_passes_clean(spark):

@@ -18,6 +18,7 @@ from data_migration_etl_scripts_spark.gates import IncrementalDependencyError
 from data_migration_etl_scripts_spark.pipelines import (
     build_entity,
     build_sync,
+    categories_pipeline,
     cities_pipeline,
     order_line_items_pipeline,
     order_payments_pipeline,
@@ -188,6 +189,21 @@ def test_subcategories_composite_crosswalk(cat):
     got = {row.SubCatID: row.CategoryID for row in cat.read("SubCategoriesV2").collect()}
     # OldCategoryID 100 -> (900,'Oil') -> 201; 101 -> (901,'Tyres') -> 202
     assert got == {70: 201, 71: 202}
+
+
+def test_subcategories_crosswalk_independent_of_batch_size(cat):
+    """categories APPENDS SyncCategories rows, and its surviving
+    (900, 'Oil') row carries old id 101, which the pre-seeded
+    (901, 'Tyres', 101) row also carries: 101 reaches both 201 and
+    202. The crosswalk resolves that collision by min(CategoryID),
+    the rule of ``reference_dag._packages_chained`` and of the pinned
+    DAG sink, so small batches give the same map as one batch (an
+    arbitrary-pick dedup flipped 101 to 202 at batch_size=2)."""
+    run_incremental(cat, categories_pipeline(cat), batch_size=2, batch_ts=TS)
+    r = run_incremental(cat, subcategories_pipeline(cat), batch_size=2, batch_ts=TS)
+    assert r.rows == 2
+    got = {row.SubCatID: row.CategoryID for row in cat.read("SubCategoriesV2").collect()}
+    assert got == {70: 201, 71: 201}
 
 
 def test_cities_pipeline_inner_join_drops_unknown(cat):

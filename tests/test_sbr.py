@@ -538,9 +538,9 @@ def test_loader_validation(seam):
         sb.load_sbr_tables({"huff": {"bogus": [[0, "0"]]}})
 
 
-# ----------------------------------------- r12: hand walks (CABAC
-# lesson applied: shared derivations pinned by expectations produced
-# OUTSIDE the code, before any foreign fixture exists)
+# ----------------------------------------- r12: hand walks (shared
+# derivations pinned by expectations produced OUTSIDE the code,
+# before any foreign fixture exists)
 
 
 def test_envelope_noise_bit_consumption_hand_walk(seam):
